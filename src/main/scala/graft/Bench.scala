@@ -30,12 +30,32 @@ package graft
   * three absorbs one bad interval, and a recorded max >> med flags the
   * remaining outliers as environmental rather than structural. The
   * reference applies the same repeat-and-compare methodology across its
-  * cold/warm run pairs (`QueryOrchestration.cs:425-439`).
+  * cold/warm run pairs (`QueryOrchestration.cs:425-439`). The first rep
+  * is also kept on its own (`spread.<q>.first`): it is the cold figure
+  * (fresh plan, first codegen) that the median hides.
+  *
+  * Per-query execution counters ([[Measure.Counters]]: jobs, stages,
+  * tasks, task/CPU/GC seconds, shuffle and spill) land in the full
+  * record's `counters` map, averaged over the reps. The [[Measure]]
+  * listener stays attached for the whole run; its bus drain and snapshot
+  * run between queries, outside the timed reps.
+  *
+  * Usage: `runMain graft.Bench [queryName ...]` — names select a subset
+  * (the layout phase and sentinels still run in full); an unknown name
+  * exits 2.
   */
 object Bench {
+  /** One query's record: median/min/max/first-rep seconds (all -1 when the
+    * first rep failed) and its per-rep counter averages.
+    */
+  private final case class QueryRun(name: String, med: Double, min: Double, max: Double, first: Double, counters: Option[Measure.Counters])
+
   def main(args: Array[String]): Unit = {
+    if (SparkEntry.unknownQueries(args.toSeq).nonEmpty) sys.exit(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.getOrCreate()
+    Measure.listener(spark) // attached for the whole run
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => args.isEmpty || args.contains(q._1))
 
     // JVM/codegen warmup on a trivial plan plus one 1-row touch of each
     // table family (parquet reader + vectorized decode init) — without the
@@ -104,16 +124,17 @@ object Bench {
     val layoutPhaseSecs = (System.nanoTime() - lt0) / 1e9
 
     val Reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
-    // (name, median, min, max); a first-rep failure records (-1,-1,-1) and
-    // skips the remaining reps — a broken operator costs one attempt, not
-    // three, and still reads as failed.
-    def measureQueries(): Seq[(String, Double, Double, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // A first-rep failure records -1 and skips the remaining reps — a
+    // broken operator costs one attempt, not three, and still reads as
+    // failed.
+    def measureQueries(): Seq[QueryRun] =
+      selected.map { case (name, fn) =>
         def once(): Double = {
           val t0 = System.nanoTime()
           fn(spark, sfDir).collect()
           (System.nanoTime() - t0) / 1e9
         }
+        val before = Measure.snapshot(spark)
         val times =
           try {
             val first = once()
@@ -122,10 +143,11 @@ object Bench {
             case scala.util.control.NonFatal(e) =>
               System.err.println(s"[bench] $name failed: $e"); Seq.empty[Double]
           }
-        if (times.isEmpty) (name, -1.0, -1.0, -1.0)
+        if (times.isEmpty) QueryRun(name, -1.0, -1.0, -1.0, -1.0, None)
         else {
+          val perRep = (Measure.snapshot(spark) - before) / times.size
           val sorted = times.sorted
-          (name, sorted(sorted.size / 2), sorted.head, sorted.last)
+          QueryRun(name, sorted(sorted.size / 2), sorted.head, sorted.last, times.head, Some(perRep))
         }
       }
     var results = measureQueries()
@@ -180,15 +202,23 @@ object Bench {
       runAttempts += 1
     }
     val qs = results
-      .map { case (k, med, _, _) => "\"" + k + "\":" + f"$med%.3f" }
+      .map(r => "\"" + r.name + "\":" + f"${r.med}%.3f")
       .mkString("{", ",", "}")
     val spreadJson = results
-      .map { case (k, med, mn, mx) =>
-        "\"" + k + "\":{" + f""""med":$med%.3f,"min":$mn%.3f,"max":$mx%.3f}"""
+      .map(r =>
+        "\"" + r.name + "\":{" + f""""med":${r.med}%.3f,"min":${r.min}%.3f,"max":${r.max}%.3f,"first":${r.first}%.3f}"""
+      )
+      .mkString("{", ",", "}")
+    val countersJson = results
+      .collect { case QueryRun(k, _, _, _, _, Some(c)) =>
+        "\"" + k + "\":" +
+          f"""{"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"task_s":${c.taskMs / 1e3}%.3f,""" +
+          f""""cpu_s":${c.cpuMs / 1e3}%.3f,"gc_s":${c.gcMs / 1e3}%.3f,"shuffle_read_mb":${c.shuffleReadB / 1048576.0}%.3f,""" +
+          f""""shuffle_write_mb":${c.shuffleWriteB / 1048576.0}%.3f,"spill_mb":${c.spillB / 1048576.0}%.3f}"""
       }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, med, _, _) if med < 0 => "\"" + k + "\"" }
-    val total  = results.map(_._2).filter(_ >= 0).sum
+    val failed = results.collect { case r if r.med < 0 => "\"" + r.name + "\"" }
+    val total  = results.map(_.med).filter(_ >= 0).sum
     val lateBuilds = lateBuildRows
       .map { case (n, s) => "\"" + n + "\":" + f"$s%.3f" }
       .mkString("{", ",", "}")
@@ -219,7 +249,7 @@ object Bench {
         f""""sentinel_post":{"single_thread_secs":${sentinelPost._1}%.3f,"shuffle_probe_secs":${sentinelPost._2}%.3f,"membw_probe_secs":$membwLast%.3f},""" +
         f""""sentinel_attempts":$sentinelAttempts,"run_attempts":$runAttempts,"degraded_host":$degradedHost"""
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","mode":"$mode","reps":$Reps,$sentinelJson,"queries":$qs,"spread":$spreadJson,"failed":${failed
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","mode":"$mode","reps":$Reps,$sentinelJson,"queries":$qs,"spread":$spreadJson,"counters":$countersJson,"failed":${failed
           .mkString("[", ",", "]")},"layout_phase_secs":$layoutPhaseSecs%.3f,"layouts":$layoutJson,"late_builds":$lateBuilds,"sf":"$sfDir"}"""
     println(json)
     // Also WRITE the line: stdout capture has twice truncated the per-query
@@ -237,10 +267,10 @@ object Bench {
     // per-query map lives in the file written above, which is committed
     // with each round.
     val slowest = results
-      .filter(_._2 >= 0)
-      .sortBy(-_._2)
+      .filter(_.med >= 0)
+      .sortBy(-_.med)
       .take(10)
-      .map { case (k, med, _, _) => "\"" + k + "\":" + f"$med%.3f" }
+      .map(r => "\"" + r.name + "\":" + f"${r.med}%.3f")
       .mkString("{", ",", "}")
     val digest =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","mode":"$mode","reps":$Reps,"n_queries":${results.size},$sentinelJson,"failed":${failed

@@ -30,6 +30,7 @@ object ExplainDump {
       }
       val Array(outDir, suffix, qlist) = parts
       val names                        = qlist.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      if (SparkEntry.unknownQueries(names.toSeq.sorted).nonEmpty) sys.exit(2)
       val spark                        = GraftSession.getOrCreate()
       Files.createDirectories(Paths.get(outDir))
       SparkEntry.queries.toSeq.sortBy(_._1).filter(q => names(q._1)).foreach { case (name, fn) =>
@@ -65,7 +66,8 @@ object ExplainDump {
         )
         sb.append(s"\n## $name\n\n```\n$plan```\n")
       } catch {
-        case e: Throwable => sb.append(s"\n## $name\n\nEXPLAIN FAILED: ${e.getMessage}\n")
+        // an OOM must stop the dump, not be recorded as a failed plan
+        case scala.util.control.NonFatal(e) => sb.append(s"\n## $name\n\nEXPLAIN FAILED: ${e.getMessage}\n")
       }
     }
     Files.writeString(Paths.get(outFile), sb.toString)

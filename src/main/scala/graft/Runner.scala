@@ -82,44 +82,40 @@ object Runner {
     */
   def run(spark: SparkSession, dataDir: String, names: Seq[String], outputDir: Option[String]): Int = {
     val toRun   = if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted
-    var unknown = 0
+    val unknown = SparkEntry.unknownQueries(toRun)
     toRun.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None =>
-          unknown += 1
-          System.err.println(s"unknown query: $name (have: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})")
-        case Some(fn) =>
-          outputDir match {
-            case Some(out) =>
-              val t0 = System.nanoTime()
-              fn(spark, dataDir).write.mode("overwrite").parquet(s"$out/$name.parquet")
-              println(f"== $name: written to $out/$name.parquet in ${(System.nanoTime() - t0) / 1e9}%.3fs")
-            case None =>
-              // Console mode mirrors the reference's take(5) harness but
-              // must time FULL execution honestly: a `limit(N).collect()`
-              // pushes the limit into the plan (an orderBy becomes
-              // TakeOrderedAndProject, scans early-exit), so for sub-cap
-              // results it would time a cheaper plan than the query's
-              // real cost. Timed runs therefore go to the noop sink —
-              // every operator and column materializes, nothing is
-              // limit-pruned, and no rows cross to the driver (a pair
-              // table on a degenerate corpus can't OOM the console).
-              // The row count and 5-row preview are separate, untimed
-              // passes. `output.dir` is the path for full results.
-              val df = fn(spark, dataDir)
-              val t0 = System.nanoTime()
-              df.write.format("noop").mode("overwrite").save()
-              val cold = (System.nanoTime() - t0) / 1e9
-              val t1   = System.nanoTime()
-              fn(spark, dataDir).write.format("noop").mode("overwrite").save()
-              val warm  = (System.nanoTime() - t1) / 1e9
-              val nRows = fn(spark, dataDir).count()
-              println(f"== $name: $nRows rows, cold $cold%.3fs, warm $warm%.3fs (noop-sink timings: full materialization, no driver fetch)")
-              fn(spark, dataDir).take(5).foreach(r => println(s"   $r"))
-          }
+      SparkEntry.queries.get(name).foreach { fn =>
+        outputDir match {
+          case Some(out) =>
+            val t0 = System.nanoTime()
+            fn(spark, dataDir).write.mode("overwrite").parquet(s"$out/$name.parquet")
+            println(f"== $name: written to $out/$name.parquet in ${(System.nanoTime() - t0) / 1e9}%.3fs")
+          case None =>
+            // Console mode mirrors the reference's take(5) harness but
+            // must time FULL execution honestly: a `limit(N).collect()`
+            // pushes the limit into the plan (an orderBy becomes
+            // TakeOrderedAndProject, scans early-exit), so for sub-cap
+            // results it would time a cheaper plan than the query's
+            // real cost. Timed runs therefore go to the noop sink —
+            // every operator and column materializes, nothing is
+            // limit-pruned, and no rows cross to the driver (a pair
+            // table on a degenerate corpus can't OOM the console).
+            // The row count and 5-row preview are separate, untimed
+            // passes. `output.dir` is the path for full results.
+            val df = fn(spark, dataDir)
+            val t0 = System.nanoTime()
+            df.write.format("noop").mode("overwrite").save()
+            val cold = (System.nanoTime() - t0) / 1e9
+            val t1   = System.nanoTime()
+            fn(spark, dataDir).write.format("noop").mode("overwrite").save()
+            val warm  = (System.nanoTime() - t1) / 1e9
+            val nRows = fn(spark, dataDir).count()
+            println(f"== $name: $nRows rows, cold $cold%.3fs, warm $warm%.3fs (noop-sink timings: full materialization, no driver fetch)")
+            fn(spark, dataDir).take(5).foreach(r => println(s"   $r"))
+        }
       }
     }
-    unknown
+    unknown.size
   }
 
   def main(args: Array[String]): Unit = {

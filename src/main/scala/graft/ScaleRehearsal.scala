@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Measure.timed
 
 /** Scale rehearsal: replicate the sf0.1 corpus `reps`× with perturbed keys
   * into a MULTI-FILE folder-of-parquet layout (one file per replica — so
@@ -18,8 +19,10 @@ import org.apache.spark.sql.functions._
   *     are NEAR-dups of each other (~0.97 Jaccard), exercising the dedup
   *     rungs with a 100× bigger pair structure, not exact-dup degenerate
   *
-  * Usage: runMain graft.ScaleRehearsal [srcSfDir] [dstDir] [reps]
-  * (writes are skipped when dst already exists — delete to rebuild)
+  * Usage: runMain graft.ScaleRehearsal [srcSfDir] [dstDir] [reps], or
+  * `ScaleRehearsal <mode> [args]` for one of the named rehearsals (see
+  * `modes`). Writes are skipped when dst already exists — delete to
+  * rebuild. Every timed line comes from [[Measure.timed]].
   */
 object ScaleRehearsal {
   private val Stride = 1000000000L
@@ -115,11 +118,8 @@ object ScaleRehearsal {
     }
     val li  = spark.read.parquet(s"$dst/lineitem.parquet")
     val ord = spark.read.parquet(s"$dst/orders.parquet")
-    def agg(j: DataFrame): Long = {
-      val t0 = System.nanoTime()
-      j.groupBy("o_orderpriority").agg(count(lit(1)).as("cnt")).collect()
-      (System.nanoTime() - t0) / 1000000L
-    }
+    def agg(label: String)(j: DataFrame): Unit =
+      timed("skew", label)(j.groupBy("o_orderpriority").agg(count(lit(1)).as("cnt")).collect())
     // Deterministic evidence first: max rows landing on ONE reducer of the
     // join, plain vs salted — the straggler that wall-clock jitter hides at
     // toy scale but that decides completion time on a 1000-executor cluster
@@ -152,39 +152,16 @@ object ScaleRehearsal {
       )
       for (round <- 1 to 3) { // round 1 warms JIT/page cache
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        val plain  = agg(li.join(ord, col("l_orderkey") === col("o_orderkey")))
-        val salted = agg(graft.operators.Skew.saltedJoin(li, ord, "l_orderkey", "o_orderkey"))
+        agg(s"round $round plain (no AQE split)")(li.join(ord, col("l_orderkey") === col("o_orderkey")))
+        agg(s"round $round salted")(graft.operators.Skew.saltedJoin(li, ord, "l_orderkey", "o_orderkey"))
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        val aqe = agg(li.join(ord, col("l_orderkey") === col("o_orderkey")))
-        println(f"[skew] round $round: plain(no-AQE-split)=$plain%d ms  salted=$salted%d ms  plain+AQE-split=$aqe%d ms")
+        agg(s"round $round plain + AQE split")(li.join(ord, col("l_orderkey") === col("o_orderkey")))
       }
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     }
-  }
-
-  /** Per-task shuffle-read balance across a measured phase: max vs mean
-    * bytes over tasks that read any shuffle — the straggler factor that
-    * decides completion time on a real cluster (a stage is as slow as its
-    * fattest reducer, which wall-clock totals hide at local scale).
-    */
-  private class TaskBalance extends org.apache.spark.scheduler.SparkListener {
-    private val lock          = new Object
-    private var mx            = 0L
-    private var sum           = 0L
-    private var n             = 0L
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        val r = m.shuffleReadMetrics.totalBytesRead
-        if (r > 0) lock.synchronized { mx = math.max(mx, r); sum += r; n += 1 }
-      }
-    }
-    def reset(): Unit = lock.synchronized { mx = 0; sum = 0; n = 0 }
-    /** (max, mean, taskCount) over shuffle-reading tasks since reset. */
-    def stats: (Long, Long, Long) = lock.synchronized { (mx, if (n > 0) sum / n else 0L, n) }
   }
 
   /** No-broadcast TPC-H join rehearsal (verdict r9 #7): the multi-table
@@ -194,7 +171,7 @@ object ScaleRehearsal {
     * when dimension tables outgrow executor memory. Run under
     * `SPARK_DRIVER_MEM=4g` for the constrained-heap variant (the skew/
     * pressure precedent). Records per query: wall, shuffle bytes, spill,
-    * and per-task reducer balance ([[TaskBalance]]). The claim to check:
+    * and per-task reducer balance (max/mean read, [[Measure.timed]]). The claim to check:
     * every chain completes with bounded spill and near-ideal reducer
     * balance (the join keys are unskewed, so sort-merge partitions
     * evenly) — the plans degrade from broadcast to exchange+sort, never
@@ -204,10 +181,6 @@ object ScaleRehearsal {
     build(spark, src, dst, 10)
     val heapMb = Runtime.getRuntime.maxMemory() / 1048576
     println(s"[tpchnb] heap=${heapMb}MiB corpus=$dst (broadcast disabled: planner + AQE conversion)")
-    val pm = new PhaseMetrics
-    val tb = new TaskBalance
-    spark.sparkContext.addSparkListener(pm)
-    spark.sparkContext.addSparkListener(tb)
     val names = Seq(
       "q9_star_join", "q10_rollup", "q21_part_brand_revenue",
       "q23_bucketed_star", "q24_shipping_priority",
@@ -220,19 +193,7 @@ object ScaleRehearsal {
       spark.range(1000000).selectExpr("sum(id)").collect() // warmup
       for (round <- 1 to 2) { // round 1 warms page cache/JIT; round 2 is the record
         names.foreach { name =>
-          tb.reset()
-          val (w0, m0, d0) = pm.snapshot
-          val t0           = System.nanoTime()
-          val rows         = SparkEntry.queries(name)(spark, dst).collect().length
-          val secs         = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(200) // let the listeners drain this phase's events
-          val (w1, m1, d1)   = pm.snapshot
-          val (mx, mean, nt) = tb.stats
-          println(
-            f"[tpchnb] round $round $name%-26s rows=$rows%-7d $secs%7.1f s  " +
-              f"shuffle=${(w1 - w0) / 1048576.0}%8.1f MiB  spill_mem=${(m1 - m0) / 1048576}%d MiB  spill_disk=${(d1 - d0) / 1048576}%d MiB  " +
-              f"reducer max/mean=${if (mean > 0) mx.toDouble / mean else 0.0}%.1fx over $nt%d tasks"
-          )
+          timed("tpchnb", s"round $round $name")(SparkEntry.queries(name)(spark, dst).collect().length.toLong)
         }
       }
     } finally {
@@ -293,17 +254,13 @@ object ScaleRehearsal {
     ensureReplicatedDocs(spark, src, dst, reps)
     val docs  = spark.read.parquet(s"$dst/documents.parquet")
     val nDocs = docs.count()
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val a = body
-      println(f"[dedup100] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.1f s"); a
-    }
-    val maxDf = timed("shingle df profile") {
+    val maxDf = timed("dedup100", "shingle df profile") {
       Dedup.shingles(docs).groupBy("s").agg(count(lit(1)).as("df")).agg(max("df")).head().getLong(0)
-    }
+    }.value
     println(f"[dedup100] n_docs=$nDocs%d max_shingle_df=$maxDf%d (stop-shingle cap 1000, margin ${1000.0 / maxDf}%.1fx)")
     // signatures once to parquet (the persisted-index shape), stages read back
     val art = s"$dst/_artifacts"
-    timed("minhash signatures") {
+    timed("dedup100", "minhash signatures") {
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$art/_SUCCESS_ART"))) {
         val (ds, bk) = Dedup.minhashArtifacts(docs)
         ds.write.mode("overwrite").parquet(s"$art/docsets.parquet")
@@ -313,57 +270,34 @@ object ScaleRehearsal {
     }
     val buckets = spark.read.parquet(s"$art/buckets.parquet")
     val docSets = spark.read.parquet(s"$art/docsets.parquet")
-    val maxBucket = timed("bucket profile") {
+    val maxBucket = timed("dedup100", "bucket profile") {
       buckets.groupBy("band", "bv").agg(count(lit(1)).as("n")).agg(max("n")).head().getLong(0)
-    }
+    }.value
     val cand = buckets
       .as("a")
       .join(buckets.as("b"), col("a.band") === col("b.band") && col("a.bv") === col("b.bv") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
       .localCheckpoint()
-    val nCand     = timed("candidate generation")(cand.count())
+    val nCand     = timed("dedup100", "candidate generation")(cand.count()).value
     val verified  = Dedup.verifyPairs(docSets, cand).localCheckpoint()
-    val nVerified = timed("exact verification")(verified.count())
+    val nVerified = timed("dedup100", "exact verification")(verified.count()).value
     println(
       f"[dedup100] max_bucket=$maxBucket%d candidates=$nCand%d verified=$nVerified%d " +
         f"(collision efficiency ${nVerified * 100.0 / math.max(nCand, 1)}%.1f%%)"
     )
-    val clusters = timed("star contraction") {
+    val clusters = timed("dedup100", "star contraction") {
       Dedup
         .clustersFromPairsStar(
           verified.select("doc_a", "doc_b"),
           onRound = Some((r, e) => println(s"[dedup100]   round $r: $e edges"))
         )
         .localCheckpoint()
-    }
+    }.value
     val nClusters = clusters.select("cluster_id").distinct().count()
     val maxCluster =
       clusters.groupBy("cluster_id").agg(count(lit(1)).as("n")).agg(max("n")).head().getLong(0)
     println(s"[dedup100] clusters=$nClusters max_cluster_size=$maxCluster")
-  }
-
-  /** Aggregated shuffle/spill bytes across completed stages — the metrics
-    * a rehearsal records as scale evidence (wall time alone doesn't show
-    * WHERE the bytes went or whether memory pressure forced spills).
-    */
-  private class PhaseMetrics extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new AtomicLong
-    val spillMem     = new AtomicLong
-    val spillDisk    = new AtomicLong
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted
-    ): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spillMem.addAndGet(m.memoryBytesSpilled)
-        spillDisk.addAndGet(m.diskBytesSpilled)
-        ()
-      }
-    }
-    def snapshot: (Long, Long, Long) = (shuffleWrite.get, spillMem.get, spillDisk.get)
   }
 
   /** 100× SPAN-family rehearsal (verdict r7 #6): the explode path
@@ -380,34 +314,19 @@ object ScaleRehearsal {
     val nDocs  = docs.count()
     val tokens = docs.agg(sum(size(split(col("text"), " ")))).head().getLong(0)
     println(f"[spans100] n_docs=$nDocs%d token_stream=$tokens%d (span stream ≈ tokens - 7·docs)")
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
-    def timed(label: String)(body: => Long): Unit = {
-      val (w0, s0, d0) = pm.snapshot
-      val t0           = System.nanoTime()
-      val rows         = body
-      val secs         = (System.nanoTime() - t0) / 1e9
-      // brief settle so the listener has drained this phase's stage events
-      Thread.sleep(200)
-      val (w1, _, _) = pm.snapshot
-      println(
-        f"[spans100] $label%-24s rows=$rows%-9d $secs%7.1f s  shuffle=${(w1 - w0) / 1048576.0}%9.1f MiB" +
-          (if (s0 != pm.snapshot._2) " SPILLED" else "")
-      )
-    }
-    timed("n7_shared_spans")(Dedup.sharedSpans(spark, dst).count())
+    timed("spans100", "n7_shared_spans")(Dedup.sharedSpans(spark, dst).count())
     // n8: a bare count() lets Catalyst prune the flags/md5 projection (and
     // with it most of the redaction work) — aggregate over the OUTPUT
     // columns so the measured time is the redaction, not a row count
-    timed("n8_redact_shared_spans") {
+    timed("spans100", "n8_redact_shared_spans") {
       Dedup
         .redactSharedSpans(spark, dst)
         .agg(sum(col("n_masked")).as("m"), count(col("fp_redacted")).as("c"))
         .head()
         .getLong(1)
     }
-    timed("d16_span_share")(Dedup.spanShareStats(spark, dst).count())
-    timed("n11_max_shared_segments")(Dedup.maxSharedSegments(spark, dst).count())
+    timed("spans100", "d16_span_share")(Dedup.spanShareStats(spark, dst).count())
+    timed("spans100", "n11_max_shared_segments")(Dedup.maxSharedSegments(spark, dst).count())
   }
 
   /** Memory-pressure rehearsal (verdict r7 #3): the span family + the plain
@@ -421,8 +340,6 @@ object ScaleRehearsal {
   def pressureRehearsal(spark: SparkSession, dir: String): Unit = {
     val heapMb = Runtime.getRuntime.maxMemory() / 1048576
     println(s"[pressure] heap=${heapMb}MiB corpus=$dir")
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
     val names = Seq(
       "n7_shared_spans", "n8_redact_shared_spans", "d16_span_share",
       "n11_max_shared_segments", "q10_rollup", "q11_pricing_summary",
@@ -443,16 +360,7 @@ object ScaleRehearsal {
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
     for (round <- 1 to 2) { // round 1 warms page cache/JIT; round 2 is the record
       names.foreach { name =>
-        val (_, m0, d0) = pm.snapshot
-        val t0          = System.nanoTime()
-        val rows        = SparkEntry.queries(name)(spark, dir).collect().length
-        val secs        = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200)
-        val (_, m1, d1) = pm.snapshot
-        println(
-          f"[pressure] round $round $name%-24s rows=$rows%-8d $secs%7.1f s  " +
-            f"spill_mem=${(m1 - m0) / 1048576}%d MiB spill_disk=${(d1 - d0) / 1048576}%d MiB"
-        )
+        timed("pressure", s"round $round $name")(SparkEntry.queries(name)(spark, dir).collect().length.toLong)
       }
     }
   }
@@ -464,19 +372,16 @@ object ScaleRehearsal {
     * build+query and the second its warm query.
     */
   def indexRehearsal(spark: SparkSession, dir: String): Unit = {
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[index10] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s"); r
-    }
     import operators.TextAnalysis
-    time("t4 corpus-scan BM25 (un-indexed comparator)")(TextAnalysis.bm25Rank(spark, dir).collect())
-    time("t6 cold: postings build + query")(TextAnalysis.bm25RankIndexed(spark, dir).collect())
-    time("t6 warm query")(TextAnalysis.bm25RankIndexed(spark, dir).collect())
-    time("t7 cold: base+delta build + query")(TextAnalysis.bm25RankIncremental(spark, dir).collect())
-    time("t7 warm query")(TextAnalysis.bm25RankIncremental(spark, dir).collect())
-    time("v3 cold: score layout build + read")(TextAnalysis.bigramLmScore(spark, dir).collect())
-    time("v3 warm read")(TextAnalysis.bigramLmScore(spark, dir).collect())
-    time("d21 quartile gate (warm layout)")(TextAnalysis.lmQualityKeep(spark, dir).collect())
+    def rows(df: DataFrame): Long = df.collect().length.toLong
+    timed("index10", "t4 corpus-scan BM25 (un-indexed comparator)")(rows(TextAnalysis.bm25Rank(spark, dir)))
+    timed("index10", "t6 cold: postings build + query")(rows(TextAnalysis.bm25RankIndexed(spark, dir)))
+    timed("index10", "t6 warm query")(rows(TextAnalysis.bm25RankIndexed(spark, dir)))
+    timed("index10", "t7 cold: base+delta build + query")(rows(TextAnalysis.bm25RankIncremental(spark, dir)))
+    timed("index10", "t7 warm query")(rows(TextAnalysis.bm25RankIncremental(spark, dir)))
+    timed("index10", "v3 cold: score layout build + read")(rows(TextAnalysis.bigramLmScore(spark, dir)))
+    timed("index10", "v3 warm read")(rows(TextAnalysis.bigramLmScore(spark, dir)))
+    timed("index10", "d21 quartile gate (warm layout)")(rows(TextAnalysis.lmQualityKeep(spark, dir)))
   }
 
   /** 100× TEXT-index rehearsal: the postings/BM25/LM-score families on the
@@ -503,28 +408,14 @@ object ScaleRehearsal {
       .groupBy("t").agg(count(lit(1)).as("df"))
       .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(" ")
     println(f"[text100] n_docs=$nDocs%d token_stream=$tokens%d query_term_df: $df")
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
-    def timed(label: String)(body: => Long): Unit = {
-      val (w0, _, d0) = pm.snapshot
-      val t0          = System.nanoTime()
-      val rows        = body
-      val secs        = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (w1, _, d1) = pm.snapshot
-      println(
-        f"[text100] $label%-40s rows=$rows%-7d $secs%7.1f s  " +
-          f"shuffle=${(w1 - w0) / 1048576.0}%9.1f MiB  spill_disk=${(d1 - d0) / 1048576}%d MiB"
-      )
-    }
-    timed("t4 corpus-scan BM25 (un-indexed)")(TextAnalysis.bm25Rank(spark, dst).count())
-    timed("t6 cold: postings build + query")(TextAnalysis.bm25RankIndexed(spark, dst).count())
-    timed("t6 warm indexed query")(TextAnalysis.bm25RankIndexed(spark, dst).count())
-    timed("t7 cold: base+delta build + query")(TextAnalysis.bm25RankIncremental(spark, dst).count())
-    timed("t7 warm incremental query")(TextAnalysis.bm25RankIncremental(spark, dst).count())
-    timed("v3 cold: LM train + score layout")(TextAnalysis.bigramLmScore(spark, dst).count())
-    timed("v3 warm score read")(TextAnalysis.bigramLmScore(spark, dst).count())
-    timed("d21 quartile gate (warm layout)")(TextAnalysis.lmQualityKeep(spark, dst).count())
+    timed("text100", "t4 corpus-scan BM25 (un-indexed)")(TextAnalysis.bm25Rank(spark, dst).count())
+    timed("text100", "t6 cold: postings build + query")(TextAnalysis.bm25RankIndexed(spark, dst).count())
+    timed("text100", "t6 warm indexed query")(TextAnalysis.bm25RankIndexed(spark, dst).count())
+    timed("text100", "t7 cold: base+delta build + query")(TextAnalysis.bm25RankIncremental(spark, dst).count())
+    timed("text100", "t7 warm incremental query")(TextAnalysis.bm25RankIncremental(spark, dst).count())
+    timed("text100", "v3 cold: LM train + score layout")(TextAnalysis.bigramLmScore(spark, dst).count())
+    timed("text100", "v3 warm score read")(TextAnalysis.bigramLmScore(spark, dst).count())
+    timed("text100", "d21 quartile gate (warm layout)")(TextAnalysis.lmQualityKeep(spark, dst).count())
   }
 
   /** kNN-join rehearsal: the s13/s14 family at 10× vectors (20k × 64d —
@@ -538,17 +429,13 @@ object ScaleRehearsal {
     */
   def knnRehearsal(spark: SparkSession, dir: String): Unit = {
     import operators.Similarity
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[knn10] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s"); r
-    }
-    val brute = time("s13 brute kNN join (quadratic comparator)")(
+    val brute = timed("knn10", "s13 brute kNN join (quadratic comparator)")(
       Similarity.knnJoin(spark, dir).collect()
-    )
-    val cold = time("s14 IVF kNN join cold (layout build + query)")(
+    ).value
+    val cold = timed("knn10", "s14 IVF kNN join cold (layout build + query)")(
       Similarity.knnJoinIvf(spark, dir).collect()
-    )
-    time("s14 IVF kNN join warm")(Similarity.knnJoinIvf(spark, dir).collect())
+    ).value
+    timed("knn10", "s14 IVF kNN join warm")(Similarity.knnJoinIvf(spark, dir).collect())
     val truth = brute.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getLong(2)).toSet }
     val got   = cold.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getLong(2)).toSet }
     val hits  = got.map { case (id, nbrs) => (truth.getOrElse(id, Set.empty[Long]) & nbrs).size }.sum
@@ -597,33 +484,19 @@ object ScaleRehearsal {
     import operators.Similarity
     ensureReplicatedVecs(spark, src, dst, reps)
     graft.functions.VectorFunctions.register(spark)
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
     val e = graft.sources.Tables.embeddings(spark, dst)
     val n = e.count()
     val k  = 3
     val nc = 256
     val np = 8
     println(s"[knn100] n_vectors=$n k=$k nClusters=$nc nProbe=$np")
-    def timed[A](label: String)(body: => A): (A, Double) = {
-      val (w0, _, d0) = pm.snapshot
-      val t0          = System.nanoTime()
-      val r           = body
-      val secs        = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // let the listener drain this phase's stage events
-      val (w1, _, d1) = pm.snapshot
-      println(
-        f"[knn100] $label%-44s $secs%8.1f s  shuffle=${(w1 - w0) / 1048576.0}%9.1f MiB  spill_disk=${(d1 - d0) / 1048576}%d MiB"
-      )
-      (r, secs)
-    }
     // 500 queries from the unjittered base replica, spread across families
     val queries = e
       .where(col("vec_id") < 2000 && col("vec_id") % 4 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val nQueries = queries.count()
     val topk     = graft.functions.TopK.topKIds(k)
-    val (truthRows, bruteSecs) = timed(s"brute SAMPLE ($nQueries queries x corpus)") {
+    val brute = timed("knn100", s"brute SAMPLE ($nQueries queries x corpus)") {
       e.crossJoin(broadcast(queries))
         .where(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"), expr("cosine_sim(embedding, qv)").as("cos"))
@@ -632,13 +505,14 @@ object ScaleRehearsal {
         .agg(topk(col("vec_id"), col("cos")).as("ids"))
         .collect()
     }
-    val (cold, _) = timed("s14 COLD (layout build + corpus-wide query)") {
+    val cold = timed("knn100", "s14 COLD (layout build + corpus-wide query)") {
       Similarity.knnJoinIvf(spark, dst, k, nClusters = nc, nProbe = np).collect()
-    }
-    val (_, warmSecs) = timed("s14 WARM (corpus-wide query)") {
+    }.value
+    val warmSecs = timed("knn100", "s14 WARM (corpus-wide query)") {
       Similarity.knnJoinIvf(spark, dst, k, nClusters = nc, nProbe = np).collect()
-    }
-    val truth = truthRows.map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    }.secs
+    val bruteSecs = brute.secs
+    val truth = brute.value.map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     val got = cold
       .groupBy(_.getLong(0))
       .collect { case (id, rs) if truth.contains(id) => id -> rs.map(_.getLong(2)).toSet }
@@ -671,28 +545,15 @@ object ScaleRehearsal {
     import operators.Similarity
     ensureReplicatedVecs(spark, src, dst, 10)
     graft.functions.VectorFunctions.register(spark)
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
-    def timed[A](label: String)(body: => A): (A, Double) = {
-      val (w0, _, d0) = pm.snapshot
-      val t0          = System.nanoTime()
-      val r           = body
-      val secs        = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (w1, _, d1) = pm.snapshot
-      println(
-        f"[bitext] $label%-52s $secs%8.1f s  shuffle=${(w1 - w0) / 1048576.0}%9.1f MiB  spill_disk=${(d1 - d0) / 1048576}%d MiB"
-      )
-      (r, secs)
-    }
     val e  = graft.sources.Tables.embeddings(spark, dst)
     val nS = e.where(pmod(col("label"), lit(2)) === 0).count()
     val nT = e.where(pmod(col("label"), lit(2)) === 1).count()
     println(s"[bitext] n=${nS + nT} |S|=$nS |T|=$nT exact_scored=${nS * nT}")
-    val (exact, b1Secs) = timed(s"b1 exact (|S|x|T| = ${nS * nT} scored)") {
+    val b1 = timed("bitext", s"b1 exact (|S|x|T| = ${nS * nT} scored)") {
       Similarity.bitextMarginPairs(spark, dst).collect()
     }
-    val exactSet = exact.map(r => (r.getLong(0), r.getLong(1))).toSet
+    val b1Secs   = b1.secs
+    val exactSet = b1.value.map(r => (r.getLong(0), r.getLong(1))).toSet
     // rows: the registered fixed point, the hand-scaled r18 point, and
     // the AUTO point resolveIvfKnobs derives for this corpus size
     // (graft.ann.nclusters=auto) — the default a 100 TB deployment runs
@@ -700,13 +561,14 @@ object ScaleRehearsal {
     (Seq((16, 4), (64, 8)) :+ autoPoint).distinct.foreach { case (nc, np) =>
       // first counts call forces the layout build (timed apart from the
       // query, the bench discipline); the repeat is the warm count
-      val ((fwd, bwd), _) = timed(s"ivf layout build + scored counts nc=$nc np=$np") {
+      val (fwd, bwd) = timed("bitext", s"ivf layout build + scored counts nc=$nc np=$np") {
         Similarity.bitextIvfScoredCounts(spark, dst, nc, np)
-      }
-      val (got, b2Secs) = timed(s"b2 ivf warm nc=$nc np=$np") {
+      }.value
+      val b2 = timed("bitext", s"b2 ivf warm nc=$nc np=$np") {
         Similarity.bitextMarginPairsIvf(spark, dst, nClusters = nc, nProbe = np).collect()
       }
-      val gotSet = got.map(r => (r.getLong(0), r.getLong(1))).toSet
+      val b2Secs = b2.secs
+      val gotSet = b2.value.map(r => (r.getLong(0), r.getLong(1))).toSet
       val agree  = (gotSet & exactSet).size
       // PER-DIRECTION accounting (round 20): b2 must score the forward
       // and backward kNN lists SEPARATELY (their probe sets differ), so
@@ -779,12 +641,6 @@ object ScaleRehearsal {
       fs.create(planted).close()
       println(s"[bitextyield] planted $K translated pairs at ids $baseId+")
     }
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val a  = body
-      println(f"[bitextyield] $label%-48s ${(System.nanoTime() - t0) / 1e9}%7.1f s")
-      a
-    }
     val expected = (0 until K).map(p => (baseId + 2 * p, baseId + 2 * p + 1)).toSet
     def grade(name: String, got: Set[(Long, Long)]): Unit = {
       val ok = got == expected
@@ -793,15 +649,15 @@ object ScaleRehearsal {
           s"extras=${(got -- expected).size} ${if (ok) "EXACT-YIELD" else s"DIVERGED ${got -- expected} missing ${expected -- got}"}"
       )
     }
-    grade("b1 exact", timed("b1 exact (1e8 scored, planted corpus)") {
+    grade("b1 exact", timed("bitextyield", "b1 exact (1e8 scored, planted corpus)") {
       Similarity.bitextMarginPairs(spark, dst).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    })
+    }.value)
     val (anc, anp) = Similarity.autoIvfKnobs(
       graft.sources.Tables.embeddings(spark, dst).count())
-    grade(s"b2 ivf auto nc=$anc np=$anp", timed(s"b2 ivf auto nc=$anc np=$anp") {
+    grade(s"b2 ivf auto nc=$anc np=$anp", timed("bitextyield", s"b2 ivf auto nc=$anc np=$anp") {
       Similarity.bitextMarginPairsIvf(spark, dst, nClusters = anc, nProbe = anp)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    })
+    }.value)
   }
 
   /** kNN-graph takedown at 10× (round 18): the claim under test is the
@@ -818,34 +674,28 @@ object ScaleRehearsal {
     import operators.Similarity
     ensureReplicatedVecs(spark, src, dst, 10)
     graft.functions.VectorFunctions.register(spark)
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val a  = body
-      println(f"[knnt] $label%-52s ${(System.nanoTime() - t0) / 1e9}%7.1f s")
-      a
-    }
     val n = graft.sources.Tables.embeddings(spark, dst).count()
     println(s"[knnt] n_vectors=$n ledger_depth=${Similarity.KnnGraphLedgerDepth}")
-    timed("edge-ledger build (once per corpus version)") {
+    timed("knnt", "edge-ledger build (once per corpus version)") {
       Similarity.knnGraphLayoutCache(spark, dst, 3)
     }
     // since r19 the rungs serve from the persisted knntd layout: the first
     // call PAYS the walk (mask + ledger window + recompute + contraction)
     // as the layout build — the once-per-takedown-version cost — and the
     // repeat rows are what every subsequent query pays (parquet reads)
-    val pairs = timed("takedown layout BUILD + first read (s15t cold)") {
+    val pairs = timed("knnt", "takedown layout BUILD + first read (s15t cold)") {
+      Similarity.mutualKnnPairsTombstoned(spark, dst).count()
+    }.value
+    val clusters = timed("knnt", "takedown clusters first read (s16t, shares the build)") {
+      Similarity.mutualKnnClustersTombstoned(spark, dst).count()
+    }.value
+    timed("knnt", "s15t WARM (persisted serve — the per-query cost)") {
       Similarity.mutualKnnPairsTombstoned(spark, dst).count()
     }
-    val clusters = timed("takedown clusters first read (s16t, shares the build)") {
+    timed("knnt", "s16t WARM (persisted serve — the per-query cost)") {
       Similarity.mutualKnnClustersTombstoned(spark, dst).count()
     }
-    timed("s15t WARM (persisted serve — the per-query cost)") {
-      Similarity.mutualKnnPairsTombstoned(spark, dst).count()
-    }
-    timed("s16t WARM (persisted serve — the per-query cost)") {
-      Similarity.mutualKnnClustersTombstoned(spark, dst).count()
-    }
-    timed("from-scratch survivor REBUILD (the shape the walk replaces)") {
+    timed("knnt", "from-scratch survivor REBUILD (the shape the walk replaces)") {
       val surv = graft.sources.Tables
         .embeddings(spark, dst)
         .join(Similarity.knnTombstones(spark, dst), Seq("vec_id"), "left_anti")
@@ -893,8 +743,6 @@ object ScaleRehearsal {
       }
       fs.create(new org.apache.hadoop.fs.Path(s"$dst/_built")).close()
     }
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
     val docs  = spark.read.parquet(s"$dst/documents.parquet")
     val base  = java.nio.file.Files.createTempDirectory("graft_novelty10").toString
     val total = docs.count()
@@ -902,17 +750,12 @@ object ScaleRehearsal {
     (0 until nBatches).foreach { i =>
       // replica-ordered slices: arrival order = replication order
       val slice = docs.where(expr(s"((doc_id div $Stride) * $nBatches) div $reps") === i)
-      val (w0, _, _) = pm.snapshot
-      val t0         = System.nanoTime()
-      graft.streaming.NoveltyStream.processBatch(slice, s"$base/idx", s"$base/novelty", i.toLong)
-      val secs       = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (w1, _, _) = pm.snapshot
-      val appended   = spark.read.parquet(s"$base/idx/firsts/batch_id=$i").count()
-      val scored     = spark.read.parquet(s"$base/novelty/batch_id=$i").count()
-      println(
-        f"[novelty10] batch $i%d: docs=${slice.count()}%-7d scored=$scored%-7d index_appends=$appended%-8d $secs%6.1f s  shuffle=${(w1 - w0) / 1048576.0}%8.1f MiB"
+      timed("novelty10", s"batch $i")(
+        graft.streaming.NoveltyStream.processBatch(slice, s"$base/idx", s"$base/novelty", i.toLong)
       )
+      val appended = spark.read.parquet(s"$base/idx/firsts/batch_id=$i").count()
+      val scored   = spark.read.parquet(s"$base/novelty/batch_id=$i").count()
+      println(f"[novelty10] batch $i%d: docs=${slice.count()}%-7d scored=$scored%-7d index_appends=$appended%-8d")
     }
     val idx = spark.read.parquet(s"$base/idx/firsts").count()
     println(s"[novelty10] final index rows=$idx (= distinct shingles of the whole corpus — each stored once)")
@@ -920,24 +763,17 @@ object ScaleRehearsal {
 
   def streamRehearsal(spark: SparkSession, src: String, dst: String, reps: Int, nBatches: Int = 5): Unit = {
     ensureReplicatedDocs(spark, src, dst, reps)
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
     val docs  = spark.read.parquet(s"$dst/documents.parquet")
     val base  = java.nio.file.Files.createTempDirectory("graft_stream10").toString
     val total = docs.count()
     println(s"[stream10] n_docs=$total in $nBatches hash-sliced micro-batches (index grows, batches don't)")
     (0 until nBatches).foreach { i =>
-      val slice        = docs.where(pmod(xxhash64(col("doc_id")), lit(nBatches)) === i)
-      val (w0, _, _)   = pm.snapshot
-      val t0           = System.nanoTime()
-      graft.streaming.DedupStream.processBatch(slice, s"$base/idx", s"$base/pairs", i.toLong)
-      val secs         = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (w1, _, _) = pm.snapshot
-      val pairs      = spark.read.parquet(s"$base/pairs/batch_id=$i").count()
-      println(
-        f"[stream10] batch $i%d: docs=${slice.count()}%-7d pairs=$pairs%-6d $secs%6.1f s  shuffle=${(w1 - w0) / 1048576.0}%8.1f MiB"
+      val slice = docs.where(pmod(xxhash64(col("doc_id")), lit(nBatches)) === i)
+      timed("stream10", s"batch $i")(
+        graft.streaming.DedupStream.processBatch(slice, s"$base/idx", s"$base/pairs", i.toLong)
       )
+      val pairs = spark.read.parquet(s"$base/pairs/batch_id=$i").count()
+      println(f"[stream10] batch $i%d: docs=${slice.count()}%-7d pairs=$pairs%-6d")
     }
   }
 
@@ -958,34 +794,20 @@ object ScaleRehearsal {
     ensureReplicatedDocs(spark, src, dstDocs, reps)
     val nDocs = spark.read.parquet(s"$dstDocs/documents.parquet").count()
     println(s"[wave100] n_docs=$nDocs (${reps}x) — d31/t15/m6-m8; q51 at 10x lineitem")
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
-    def timed(label: String)(body: => Long): Unit = {
-      val (w0, _, d0) = pm.snapshot
-      val t0          = System.nanoTime()
-      val rows        = body
-      val secs        = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (w1, _, d1) = pm.snapshot
-      println(
-        f"[wave100] $label%-44s rows=$rows%-8d $secs%7.1f s  " +
-          f"shuffle=${(w1 - w0) / 1048576.0}%9.1f MiB  spill_disk=${(d1 - d0) / 1048576}%d MiB"
-      )
-    }
-    timed("d31 trim repeated ngrams 1x")(TextAnalysis.trimRepeatedNgrams(spark, src).count())
-    timed(s"d31 trim repeated ngrams ${reps}x")(TextAnalysis.trimRepeatedNgrams(spark, dstDocs).count())
-    timed("t15 phrase 1x (cold: positions build)")(TextAnalysis.phraseSearchIndexed(spark, src).count())
-    timed(s"t15 phrase ${reps}x cold: positions build")(TextAnalysis.phraseSearchIndexed(spark, dstDocs).count())
-    timed(s"t15 phrase ${reps}x warm over positions")(TextAnalysis.phraseSearchIndexed(spark, dstDocs).count())
-    timed("m6 audio frame energy 1x")(Multimodal.audioFrameEnergyQuery(spark, src).count())
-    timed(s"m6 audio frame energy ${reps}x")(Multimodal.audioFrameEnergyQuery(spark, dstDocs).count())
-    timed("m7 activity segments 1x")(Multimodal.audioActivitySegments(spark, src).count())
-    timed(s"m7 activity segments ${reps}x")(Multimodal.audioActivitySegments(spark, dstDocs).count())
-    timed("m8 image histogram 1x")(Multimodal.imageHistogramQuery(spark, src).count())
-    timed(s"m8 image histogram ${reps}x")(Multimodal.imageHistogramQuery(spark, dstDocs).count())
+    timed("wave100", "d31 trim repeated ngrams 1x")(TextAnalysis.trimRepeatedNgrams(spark, src).count())
+    timed("wave100", s"d31 trim repeated ngrams ${reps}x")(TextAnalysis.trimRepeatedNgrams(spark, dstDocs).count())
+    timed("wave100", "t15 phrase 1x (cold: positions build)")(TextAnalysis.phraseSearchIndexed(spark, src).count())
+    timed("wave100", s"t15 phrase ${reps}x cold: positions build")(TextAnalysis.phraseSearchIndexed(spark, dstDocs).count())
+    timed("wave100", s"t15 phrase ${reps}x warm over positions")(TextAnalysis.phraseSearchIndexed(spark, dstDocs).count())
+    timed("wave100", "m6 audio frame energy 1x")(Multimodal.audioFrameEnergyQuery(spark, src).count())
+    timed("wave100", s"m6 audio frame energy ${reps}x")(Multimodal.audioFrameEnergyQuery(spark, dstDocs).count())
+    timed("wave100", "m7 activity segments 1x")(Multimodal.audioActivitySegments(spark, src).count())
+    timed("wave100", s"m7 activity segments ${reps}x")(Multimodal.audioActivitySegments(spark, dstDocs).count())
+    timed("wave100", "m8 image histogram 1x")(Multimodal.imageHistogramQuery(spark, src).count())
+    timed("wave100", s"m8 image histogram ${reps}x")(Multimodal.imageHistogramQuery(spark, dstDocs).count())
     build(spark, src, dstTenX, 10)
-    timed("q51 supplier busy days 1x")(CoreQueries.q51SupplierBusyDays(spark, src).count())
-    timed("q51 supplier busy days 10x")(CoreQueries.q51SupplierBusyDays(spark, dstTenX).count())
+    timed("wave100", "q51 supplier busy days 1x")(CoreQueries.q51SupplierBusyDays(spark, src).count())
+    timed("wave100", "q51 supplier busy days 10x")(CoreQueries.q51SupplierBusyDays(spark, dstTenX).count())
   }
 
   /** Deletion-lifecycle + sequence-export rehearsal (round 12): t16's
@@ -1000,26 +822,12 @@ object ScaleRehearsal {
     import graft.operators.{Retention, TextAnalysis}
     ensureReplicatedDocs(spark, src, dstDocs, reps)
     build(spark, src, dstTenX, 10)
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
-    def timed(label: String)(body: => Long): Unit = {
-      val (w0, _, d0) = pm.snapshot
-      val t0          = System.nanoTime()
-      val rows        = body
-      val secs        = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (w1, _, d1) = pm.snapshot
-      println(
-        f"[lifecycle] $label%-44s rows=$rows%-8d $secs%7.1f s  " +
-          f"shuffle=${(w1 - w0) / 1048576.0}%9.1f MiB  spill_disk=${(d1 - d0) / 1048576}%d MiB"
-      )
-    }
-    timed("t7 maintained (base+delta) build+query 100x")(TextAnalysis.bm25RankIncremental(spark, dstDocs).count())
-    timed("t16 compaction fold + query 100x (cold)")(TextAnalysis.bm25RankCompacted(spark, dstDocs).count())
-    timed("t16 compacted query 100x (warm)")(TextAnalysis.bm25RankCompacted(spark, dstDocs).count())
-    timed("t17 tombstone-masked query 100x")(TextAnalysis.bm25RankTombstoned(spark, dstDocs).count())
-    timed("u4 user sequences 1x")(Retention.userEventSequences(spark, src).count())
-    timed("u4 user sequences 10x events")(Retention.userEventSequences(spark, dstTenX).count())
+    timed("lifecycle", "t7 maintained (base+delta) build+query 100x")(TextAnalysis.bm25RankIncremental(spark, dstDocs).count())
+    timed("lifecycle", "t16 compaction fold + query 100x (cold)")(TextAnalysis.bm25RankCompacted(spark, dstDocs).count())
+    timed("lifecycle", "t16 compacted query 100x (warm)")(TextAnalysis.bm25RankCompacted(spark, dstDocs).count())
+    timed("lifecycle", "t17 tombstone-masked query 100x")(TextAnalysis.bm25RankTombstoned(spark, dstDocs).count())
+    timed("lifecycle", "u4 user sequences 1x")(Retention.userEventSequences(spark, src).count())
+    timed("lifecycle", "u4 user sequences 10x events")(Retention.userEventSequences(spark, dstTenX).count())
   }
 
   /** Round-13 rehearsal: the perceptual-dedup pair join (n17) on the 100×
@@ -1037,42 +845,25 @@ object ScaleRehearsal {
     import graft.sources.BloomManifest
     ensureReplicatedDocs(spark, src, dstDocs, reps)
     build(spark, src, dstTenX, 10)
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
-    def timed(label: String)(body: => Long): Unit = {
-      val (w0, _, d0) = pm.snapshot
-      val t0          = System.nanoTime()
-      val rows        = body
-      val secs        = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (w1, _, d1) = pm.snapshot
-      println(
-        f"[round13] $label%-44s rows=$rows%-8d $secs%7.1f s  " +
-          f"shuffle=${(w1 - w0) / 1048576.0}%9.1f MiB  spill_disk=${(d1 - d0) / 1048576}%d MiB"
-      )
-    }
-    timed("m9 dHash ledger 1x")(Multimodal.imageDhashQuery(spark, src).count())
-    timed(s"m9 dHash ledger ${reps}x")(Multimodal.imageDhashQuery(spark, dstDocs).count())
-    timed("n17 dHash pairs 1x")(Dedup.imageDhashPairs(spark, src).count())
-    timed(s"n17 dHash pairs ${reps}x (degenerate hashes)")(Dedup.imageDhashPairs(spark, dstDocs).count())
-    timed("t18 regex search 1x (cold: trigram build)")(TextAnalysis.regexSearch(spark, src).count())
-    timed(s"t18 regex search ${reps}x cold: trigram build")(TextAnalysis.regexSearch(spark, dstDocs).count())
-    timed(s"t18 regex search ${reps}x warm over index")(TextAnalysis.regexSearch(spark, dstDocs).count())
+    timed("round13", "m9 dHash ledger 1x")(Multimodal.imageDhashQuery(spark, src).count())
+    timed("round13", s"m9 dHash ledger ${reps}x")(Multimodal.imageDhashQuery(spark, dstDocs).count())
+    timed("round13", "n17 dHash pairs 1x")(Dedup.imageDhashPairs(spark, src).count())
+    timed("round13", s"n17 dHash pairs ${reps}x (degenerate hashes)")(Dedup.imageDhashPairs(spark, dstDocs).count())
+    timed("round13", "t18 regex search 1x (cold: trigram build)")(TextAnalysis.regexSearch(spark, src).count())
+    timed("round13", s"t18 regex search ${reps}x cold: trigram build")(TextAnalysis.regexSearch(spark, dstDocs).count())
+    timed("round13", s"t18 regex search ${reps}x warm over index")(TextAnalysis.regexSearch(spark, dstDocs).count())
     // z2 at 10x events, 64 files: manifest build (cold), then probe+read
     // vs the full scan over the same rewritten data
-    val layout = {
-      val t0 = System.nanoTime()
-      val l  = BloomManifest.eventsManifestCache(spark, dstTenX, nFiles = 64)
-      println(f"[round13] z2 manifest build 10x events / 64 files          ${(System.nanoTime() - t0) / 1e9}%7.1f s")
-      l
-    }
+    val layout = timed("round13", "z2 manifest build 10x events / 64 files")(
+      BloomManifest.eventsManifestCache(spark, dstTenX, nFiles = 64)
+    ).value
     val probeKey = spark.read.parquet(s"$layout/data").select("event_id").head().getLong(0)
     val nCand    = BloomManifest.candidateFiles(spark, s"$layout/manifest.parquet", probeKey).size
     println(s"[round13] z2 candidate files for present key: $nCand of 64")
-    timed("z2 bloom-pruned point lookup 10x")(
+    timed("round13", "z2 bloom-pruned point lookup 10x")(
       BloomManifest.pointLookupBloomPruned(spark, dstTenX, probeKey, nFiles = 64).count()
     )
-    timed("z2 full-scan point filter 10x (same data)")(
+    timed("round13", "z2 full-scan point filter 10x (same data)")(
       spark.read.parquet(s"$layout/data").where(org.apache.spark.sql.functions.col("event_id") === probeKey).count()
     )
   }
@@ -1108,32 +899,18 @@ object ScaleRehearsal {
     geometryStamp(spark, "round14")
     ensureReplicatedDocs(spark, src, dstDocs, reps)
     build(spark, src, dstTenX, 10)
-    val pm = new PhaseMetrics
-    spark.sparkContext.addSparkListener(pm)
-    def timed(label: String)(body: => Long): Unit = {
-      val (w0, _, d0) = pm.snapshot
-      val t0          = System.nanoTime()
-      val rows        = body
-      val secs        = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (w1, _, d1) = pm.snapshot
-      println(
-        f"[round14] $label%-44s rows=$rows%-10d $secs%7.1f s  " +
-          f"shuffle=${(w1 - w0) / 1048576.0}%9.1f MiB  spill_disk=${(d1 - d0) / 1048576}%d MiB"
-      )
-    }
-    timed("n21 capped pairs 1x")(Dedup.imageDhashPairsCapped(spark, src).count())
-    timed(s"n21 capped pairs ${reps}x (n17 here: 1.46B)")(Dedup.imageDhashPairsCapped(spark, dstDocs).count())
-    timed("m10 audio hash ledger 1x")(Multimodal.audioEnvelopeHashQuery(spark, src).count())
-    timed(s"m10 audio hash ledger ${reps}x")(Multimodal.audioEnvelopeHashQuery(spark, dstDocs).count())
-    timed("n20 audio pairs 1x")(Dedup.audioHashPairs(spark, src).count())
-    timed(s"n20 audio pairs ${reps}x")(Dedup.audioHashPairs(spark, dstDocs).count())
-    timed("n22 capped audio pairs 1x")(Dedup.audioHashPairsCapped(spark, src).count())
-    timed(s"n22 capped audio pairs ${reps}x (n20: 939M)")(Dedup.audioHashPairsCapped(spark, dstDocs).count())
-    timed("n19 LSS live 1x")(
+    timed("round14", "n21 capped pairs 1x")(Dedup.imageDhashPairsCapped(spark, src).count())
+    timed("round14", s"n21 capped pairs ${reps}x (n17 here: 1.46B)")(Dedup.imageDhashPairsCapped(spark, dstDocs).count())
+    timed("round14", "m10 audio hash ledger 1x")(Multimodal.audioEnvelopeHashQuery(spark, src).count())
+    timed("round14", s"m10 audio hash ledger ${reps}x")(Multimodal.audioEnvelopeHashQuery(spark, dstDocs).count())
+    timed("round14", "n20 audio pairs 1x")(Dedup.audioHashPairs(spark, src).count())
+    timed("round14", s"n20 audio pairs ${reps}x")(Dedup.audioHashPairs(spark, dstDocs).count())
+    timed("round14", "n22 capped audio pairs 1x")(Dedup.audioHashPairsCapped(spark, src).count())
+    timed("round14", s"n22 capped audio pairs ${reps}x (n20: 939M)")(Dedup.audioHashPairsCapped(spark, dstDocs).count())
+    timed("round14", "n19 LSS live 1x")(
       Dedup.longestSharedSubstringFrom(graft.sources.Tables.documents(spark, src), 16).count()
     )
-    timed("n19 LSS live 10x")(
+    timed("round14", "n19 LSS live 10x")(
       Dedup.longestSharedSubstringFrom(graft.sources.Tables.documents(spark, dstTenX), 16).count()
     )
   }
@@ -1171,29 +948,23 @@ object ScaleRehearsal {
       .groupBy("b").agg(count(lit(1)).as("occ"))
       .agg(sum(expr("occ * (occ - 1) div 2"))).head().getLong(0)
     println(f"[round15] OLD single-level candidate volume (arithmetic): $oldCand%,d pairs")
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val a  = body
-      println(f"[round15] $label%-52s ${(System.nanoTime() - t0) / 1e9}%7.1f s")
-      a
-    }
     val stats = scala.collection.mutable.ListBuffer.empty[Dedup.DhashBandLevelStats]
-    val (cands, residual) = timed("band walk (control flow, per-level occupancy)")(
+    val (cands, residual) = timed("round15", "band walk (control flow, per-level occupancy)")(
       Dedup.dhashBandWalk(h, Some(stats))
-    )
+    ).value
     stats.foreach { s =>
       println(
         f"[round15]   level ${s.level}: rows_in=${s.rowsIn}%,d buckets=${s.nBuckets}%,d " +
           f"hot=${s.nHot}%,d max_occ=${s.maxOcc}%,d"
       )
     }
-    val nCand = timed("walk candidate volume (executed)")(cands.count())
+    val nCand = timed("round15", "walk candidate volume (executed)")(cands.count()).value
     val nRes  = residual.count()
     println(f"[round15] walk candidates: $nCand%,d (${oldCand.toDouble / math.max(1, nCand)}%.0fx below old plan); residual rows: $nRes%,d")
-    timed("n17-shape verified pairs (full rung)")(
+    timed("round15", "n17-shape verified pairs (full rung)")(
       println(s"[round15]   pairs=${Dedup.dhashPairsFromHashes(h).count()}")
     )
-    timed("n21-shape capped ledger (full rung)")(
+    timed("round15", "n21-shape capped ledger (full rung)")(
       println(s"[round15]   rows=${Dedup.dhashPairsCappedFromHashes(h, 16L).count()}")
     )
     h.unpersist()
@@ -1218,21 +989,15 @@ object ScaleRehearsal {
   def lssTakedownRehearsal(spark: SparkSession, src: String, dstTenX: String): Unit = {
     import graft.operators.Dedup
     build(spark, src, dstTenX, 10)
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val a  = body
-      println(f"[round17] $label%-52s ${(System.nanoTime() - t0) / 1e9}%7.1f s")
-      a
-    }
     val tmp = java.nio.file.Files.createTempDirectory("graft_lss_rehearsal").toString
     for ((label, dir) <- Seq("1x" -> src, "10x" -> dstTenX)) {
       val docs = graft.sources.Tables.documents(spark, dir)
-      if (label == "1x") timed(s"$label standalone n19 fold (single-output pass)") {
+      if (label == "1x") timed("round17", s"$label standalone n19 fold (single-output pass)") {
         Dedup
           .longestSharedSubstringFrom(docs, 16)
           .write.mode("overwrite").parquet(s"$tmp/v2_$label/lss.parquet")
       }
-      timed(s"$label ingest, production shape (topk once + projections)") {
+      timed("round17", s"$label ingest, production shape (topk once + projections)") {
         val (_, _, topk) = Dedup.longestSharedSubstringArtifacts(docs, 16, 4)
         topk.write.mode("overwrite").parquet(s"$tmp/v3_$label/topk.parquet")
         val t = docs.sparkSession.read.parquet(s"$tmp/v3_$label/topk.parquet")
@@ -1248,13 +1013,13 @@ object ScaleRehearsal {
       // plan stays ledger-cardinality either way because tombstones
       // arrive as a small relation joined into the ledger.
       val tomb = docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id")
-      timed(s"$label takedown walk (ledger-cardinality)") {
+      timed("round17", s"$label takedown walk (ledger-cardinality)") {
         val (decided, recompute) = Dedup.lssTakedownFromLedger(topk, tomb)
         val d = decided.count()
         val r = recompute.count()
         println(f"[round17]   decided=$d%,d overflow_recompute=$r%,d")
       }
-      timed(s"$label OLD shape: survivors recompute") {
+      timed("round17", s"$label OLD shape: survivors recompute") {
         Dedup
           .longestSharedSubstringFrom(docs.where(pmod(col("doc_id"), lit(10)) =!= 3), 16)
           .count()
@@ -1264,7 +1029,7 @@ object ScaleRehearsal {
       // rule's real overflow is 43 docs at 1x and empty at 10x — too
       // small/absent to time), so the ratio is the conservative one
       val survivors = docs.where(pmod(col("doc_id"), lit(10)) =!= 3)
-      timed(s"$label TARGETED recompute, 2%% synthetic target set") {
+      timed("round17", s"$label TARGETED recompute, 2%% synthetic target set") {
         val targets = survivors.where(pmod(col("doc_id"), lit(50)) === 7).select("doc_id")
         val n = Dedup.longestSharedSubstringTargeted(survivors, targets, 16).count()
         println(f"[round17]   targeted rows=$n%,d")
@@ -1285,15 +1050,9 @@ object ScaleRehearsal {
     build(spark, src, dstTenX, 10)
     val docs = graft.sources.Tables.documents(spark, dstTenX)
     val dir  = java.nio.file.Files.createTempDirectory("graft_lss_stream_rehearsal").toString
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val a  = body
-      println(f"[round17] $label%-52s ${(System.nanoTime() - t0) / 1e9}%7.1f s")
-      a
-    }
     (0 until 10).foreach { i =>
       val b = docs.where(expr(s"doc_id div $Stride") === i)
-      timed(s"stream batch $i (one sf0.1 replica)")(
+      timed("round17", s"stream batch $i (one sf0.1 replica)")(
         graft.streaming.LssStream.processBatch(b, dir, i.toLong)
       )
     }
@@ -1301,310 +1060,155 @@ object ScaleRehearsal {
     println(f"[round17] final streamed snapshot rows: $n%,d")
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("lssstream")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val tenX  = args.lift(2).getOrElse("/tmp/graft_sf1ish")
-      require(tenX != src && !src.startsWith(tenX), s"dst $tenX would clobber src $src")
-      lssStreamRehearsal(spark, src, tenX)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("lsstakedown")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val tenX  = args.lift(2).getOrElse("/tmp/graft_sf1ish")
-      require(tenX != src && !src.startsWith(tenX), s"dst $tenX would clobber src $src")
-      lssTakedownRehearsal(spark, src, tenX)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("bandwalk")) {
-      val spark = GraftSession.getOrCreate()
-      bandWalkRehearsal(spark, args.lift(1).map(_.toLong).getOrElse(1000000L))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("round14")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_docs100")
-      val tenX  = args.lift(4).getOrElse("/tmp/graft_sf1ish")
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      require(tenX != src && !src.startsWith(tenX), s"dst $tenX would clobber src $src")
-      // and not each other: same path would overwrite the 100x corpus
-      // with the 10x build and silently mislabel every "100x" row
-      require(dst != tenX, s"dst $dst and tenX dst must differ")
-      round14Rehearsal(spark, src, dst, args.lift(3).map(_.toInt).getOrElse(100), tenX)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("round13")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_docs100")
-      val tenX  = args.lift(4).getOrElse("/tmp/graft_sf1ish")
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      require(tenX != src && !src.startsWith(tenX), s"dst $tenX would clobber src $src")
-      round13Rehearsal(spark, src, dst, args.lift(3).map(_.toInt).getOrElse(100), tenX)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("lifecycle100")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_docs100")
-      val tenX  = args.lift(4).getOrElse("/tmp/graft_sf1ish")
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      require(tenX != src && !src.startsWith(tenX), s"dst $tenX would clobber src $src")
-      lifecycleRehearsal(spark, src, dst, args.lift(3).map(_.toInt).getOrElse(100), tenX)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("wave100")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_docs100")
-      val tenX  = args.lift(4).getOrElse("/tmp/graft_sf1ish")
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      require(tenX != src && !src.startsWith(tenX), s"dst $tenX would clobber src $src")
-      wave100Rehearsal(spark, src, dst, args.lift(3).map(_.toInt).getOrElse(100), tenX)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("stream10")) {
-      val spark = GraftSession.getOrCreate()
-      streamRehearsal(
-        spark,
-        args.lift(1).getOrElse("/root/testdata/sf0.1"),
-        args.lift(2).getOrElse("/tmp/graft_stream_docs"),
-        args.lift(3).map(_.toInt).getOrElse(10)
-      )
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("novelty10")) {
-      val spark = GraftSession.getOrCreate()
-      noveltyStreamRehearsal(
-        spark,
-        args.lift(1).getOrElse("/root/testdata/sf0.1"),
-        args.lift(2).getOrElse("/tmp/graft_stream_docs"),
-        args.lift(3).map(_.toInt).getOrElse(10)
-      )
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("knntakedown")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_vec10_bitext") // shares the bitext 10x vec corpus
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      knnTakedownRehearsal(spark, src, dst)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("bitextyield")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_vec10_yield") // own dir: the plant appends rows
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      bitextYieldRehearsal(spark, src, dst)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("bitext")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      // dedicated dst: ensureReplicatedVecs trusts an existing _built
-      // marker regardless of reps, so sharing a dir with a different-reps
-      // rehearsal would silently mislabel the corpus size
-      val dst = args.lift(2).getOrElse("/tmp/graft_vec10_bitext")
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      bitextRehearsal(spark, src, dst)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("knn100")) {
-      val spark = GraftSession.getOrCreate()
-      knn100Rehearsal(
-        spark,
-        args.lift(1).getOrElse("/root/testdata/sf0.1"),
-        args.lift(2).getOrElse("/tmp/graft_knn100"),
-        args.lift(3).map(_.toInt).getOrElse(100)
-      )
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("knn10")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_sf1ish")
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      build(spark, src, dst, 10)
-      knnRehearsal(spark, dst)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("index10")) {
-      // arg order matches every other two-dir subcommand: [srcSfDir] [dstDir]
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_sf1ish")
-      // build() wipes a markerless dst — a swapped invocation must fail
-      // loudly, never delete the source corpus
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      build(spark, src, dst, 10)
-      indexRehearsal(spark, dst)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("text100")) {
-      val spark = GraftSession.getOrCreate()
-      textRehearsal(
-        spark,
-        args.lift(1).getOrElse("/root/testdata/sf0.1"),
-        args.lift(2).getOrElse("/tmp/graft_dedup100"),
-        args.lift(3).map(_.toInt).getOrElse(100)
-      )
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("spans100")) {
-      val spark = GraftSession.getOrCreate()
-      spansRehearsal(
-        spark,
-        args.lift(1).getOrElse("/root/testdata/sf0.1"),
-        args.lift(2).getOrElse("/tmp/graft_dedup100"),
-        args.lift(3).map(_.toInt).getOrElse(100)
-      )
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("tpchnb")) {
-      val spark = GraftSession.getOrCreate()
-      val src   = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val dst   = args.lift(2).getOrElse("/tmp/graft_sf1ish")
-      require(dst != src && !src.startsWith(dst), s"dst $dst would clobber src $src")
-      tpchNoBroadcastRehearsal(spark, src, dst)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("pressure")) {
-      val spark = GraftSession.getOrCreate()
-      pressureRehearsal(spark, args.lift(1).getOrElse("/tmp/graft_sf1ish"))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("dedup100")) {
-      val spark = GraftSession.getOrCreate()
-      dedupRehearsal(
-        spark,
-        args.lift(1).getOrElse("/root/testdata/sf0.1"),
-        args.lift(2).getOrElse("/tmp/graft_dedup100"),
-        args.lift(3).map(_.toInt).getOrElse(100)
-      )
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("skew")) {
-      val spark = GraftSession.getOrCreate()
-      skewRehearsal(
-        spark,
-        args.lift(1).getOrElse("/tmp/graft_sf1ish"),
-        args.lift(2).getOrElse("/tmp/graft_skew")
-      )
-      spark.stop()
-      return
-    }
-    val src  = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val dst  = args.lift(1).getOrElse("/tmp/graft_sf1ish")
-    val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = GraftSession.getOrCreate()
-    build(spark, src, dst, reps)
+  /** The queries the default mode times on the 10× corpus. */
+  private val Headline = Seq(
+    "q1_total_count", "q2_time_filter_count", "q4_min_max", "q5_max_by",
+    "q9_star_join", "q11_pricing_summary", "n1_ngram_jaccard_pairs",
+    "n2_minhash_lsh_pairs", "n3_simhash_pairs", "n4_embedding_dup_pairs",
+    "c1_clean_corpus", "s1_ann_bruteforce", "s3_ann_batch_topk",
+    "s6_ann_ivf_partitioned", "w2_sessionize", "p1_partitioned_time_count",
+    "x3_approx_percentiles", "d6_token_stats", "q21_part_brand_revenue",
+    "a3_asof_tolerance", "q22_salted_join_count", "n5_incremental_dedup",
+    "q24_shipping_priority", "q25_local_supplier_volume", "g1_global_ids",
+    "p2_sequence_pack", "d8_decontaminate", "d11_vocab_topk",
+    "t1_keyword_search", "x5_approx_distinct_rollup", "s7_ann_with_metadata",
+    "d14_repetition_stats", "d15_top_salient_term", "n7_shared_spans",
+    "d16_span_share", "f1_fuzzy_token_pairs",
+    "w3_funnel_stages", "w4_hopping_counts", "s8_ann_quantized",
+    "q28_above_nation_avg", "q29_discount_revenue", "a4_asof_forward",
+    "s9_ann_ivf_quantized",
+    // round 6: cluster materialization + the new analytics/curation ops
+    "n6_dup_clusters", "n8_redact_shared_spans", "n9_cluster_keep",
+    "u1_retention_cohorts", "p4_pack_spans", "t2_tfidf_rank", "s10_norm_stats",
+    "t3_phrase_search", "p5_shuffle_order", "q30_value_band_join",
+    "w7_rolling_active_users", "w8_event_transitions", "d17_size_histogram",
+    "d18_source_lang_mix", "dq2_profile_documents", "dq3_profile_events_approx",
+    "c2_stage_counts", "v1_bpe_merges", "v2_bpe_token_count",
+    "d19_dedup_rate_by_source", "u2_new_vs_returning", "a5_nearest_join",
+    "w9_gap_histogram",
+    // round 7: segments, bucketed as-of, incremental clusters, anomalies, BM25
+    "n11_max_shared_segments", "a6_asof_bucketed", "n12_incremental_clusters",
+    "w10_hourly_anomalies", "t4_bm25_rank",
+    // round 8: indexed/incremental retrieval, gates, mixture machinery
+    "t5_hybrid_rrf", "t6_bm25_indexed", "t7_bm25_incremental",
+    "v4_bpe_merges_incremental", "d20_decontaminate_bloom",
+    "d21_lm_quality_keep", "d22_decontaminate_semantic",
+    "d23_split_by_cluster", "d24_mixture_epochs", "d25_contamination_gate",
+    "s11_ann_ivf_filtered", "s12_ann_ivf_incremental", "m2_media_demux",
+    "dq4_modality_coverage", "n13_frequent_ngrams", "v3_bigram_lm_score",
+    // round 9: kNN-join family (s13's quadratic rung lives in `knn10`,
+    // not here), BPE encode, curriculum order
+    "s14_knn_join_ivf", "s15_mutual_knn_pairs", "v5_bpe_encode",
+    "p6_curriculum_order",
+    // round 10: semantic clusters, planted-positive ANN twins, MP4 frames
+    "s16_mutual_knn_clusters", "s2p_ann_lsh_planted",
+    "s11p_ann_ivf_filtered_planted", "m4_mp4_frames",
+    // round 10 extensions: TPC-H decorrelation family, novelty/affinity,
+    // trigram substring search, vocab growth, novelty gate
+    "q31_customer_order_distribution", "q32_small_qty_revenue",
+    "q33_large_orders", "q34_waiting_suppliers", "q35_excess_shipments",
+    "q36_late_shipment_priority", "q37_dormant_rich_customers",
+    "q38_priority_late_orders", "q39_market_share",
+    "n15_novelty_scores", "d26_source_affinity", "d27_vocab_growth",
+    "d28_novelty_gate", "t8_substring_search",
+    // round 11: the fourth-wave TPC-H close (q40–q44), the partsupp
+    // canon (q45–q49), pruned/indexed retrieval rungs, the PQ ladder,
+    // the planted-twin matrix, and the dup-graph PageRank
+    "q40_returned_item_revenue", "q41_supplier_diversity",
+    "q42_trade_volume", "q43_disjunctive_revenue", "q44_promo_revenue",
+    "q45_min_cost_supplier", "q46_important_stock", "q47_top_supplier",
+    "q48_product_profit", "q49_excess_availability",
+    "t9_bm25_pruned", "t10_substring_incremental", "t11_ql_rank",
+    "s17_ann_pq", "s17p_ann_pq_planted", "s18_ann_ivf_pq",
+    "s4p_ann_ivf_planted", "s6p_ann_ivf_partitioned_planted",
+    "s9p_ann_ivf_quantized_planted", "s12p_ann_ivf_incremental_planted",
+    "s14p_knn_join_ivf_planted", "s18p_ann_ivf_pq_planted",
+    "s19_ann_ivf_pq_filtered", "s19p_ann_ivf_pq_filtered_planted",
+    "g2_dup_pagerank", "d30_token_budget_mixture", "p7_length_bucketed_batches",
+    "t12_proximity_rank", "m5_patch_grid",
+    // round 11 second wave: audio pair, retrieval surfaces, repetition
+    // trim, RFM, block shuffle, bloom-prefiltered join, image histograms
+    "m6_audio_frame_energy", "m7_audio_activity_segments",
+    "m8_image_histogram", "t13_kwic_snippet", "t14_term_cooccurrence",
+    "t15_phrase_indexed", "d31_trim_repeated_ngrams", "u3_rfm_segments",
+    "p8_block_shuffle_order", "q50_bloom_prefilter_join",
+    // round 11 third wave
+    "dq5_drift_profile", "n16_containment_pairs", "g3_label_propagation",
+    "p9_source_interleave", "c3_token_yield", "d32_substring_decontaminate",
+    "d33_drop_reasons", "q51_supplier_busy_days"
+  )
 
-    val headline = Seq(
-      "q1_total_count", "q2_time_filter_count", "q4_min_max", "q5_max_by",
-      "q9_star_join", "q11_pricing_summary", "n1_ngram_jaccard_pairs",
-      "n2_minhash_lsh_pairs", "n3_simhash_pairs", "n4_embedding_dup_pairs",
-      "c1_clean_corpus", "s1_ann_bruteforce", "s3_ann_batch_topk",
-      "s6_ann_ivf_partitioned", "w2_sessionize", "p1_partitioned_time_count",
-      "x3_approx_percentiles", "d6_token_stats", "q21_part_brand_revenue",
-      "a3_asof_tolerance", "q22_salted_join_count", "n5_incremental_dedup",
-      "q24_shipping_priority", "q25_local_supplier_volume", "g1_global_ids",
-      "p2_sequence_pack", "d8_decontaminate", "d11_vocab_topk",
-      "t1_keyword_search", "x5_approx_distinct_rollup", "s7_ann_with_metadata",
-      "d14_repetition_stats", "d15_top_salient_term", "n7_shared_spans",
-      "d16_span_share", "f1_fuzzy_token_pairs",
-      "w3_funnel_stages", "w4_hopping_counts", "s8_ann_quantized",
-      "q28_above_nation_avg", "q29_discount_revenue", "a4_asof_forward",
-      "s9_ann_ivf_quantized",
-      // round 6: cluster materialization + the new analytics/curation ops
-      "n6_dup_clusters", "n8_redact_shared_spans", "n9_cluster_keep",
-      "u1_retention_cohorts", "p4_pack_spans", "t2_tfidf_rank", "s10_norm_stats",
-      "t3_phrase_search", "p5_shuffle_order", "q30_value_band_join",
-      "w7_rolling_active_users", "w8_event_transitions", "d17_size_histogram",
-      "d18_source_lang_mix", "dq2_profile_documents", "dq3_profile_events_approx",
-      "c2_stage_counts", "v1_bpe_merges", "v2_bpe_token_count",
-      "d19_dedup_rate_by_source", "u2_new_vs_returning", "a5_nearest_join",
-      "w9_gap_histogram",
-      // round 7: segments, bucketed as-of, incremental clusters, anomalies, BM25
-      "n11_max_shared_segments", "a6_asof_bucketed", "n12_incremental_clusters",
-      "w10_hourly_anomalies", "t4_bm25_rank",
-      // round 8: indexed/incremental retrieval, gates, mixture machinery
-      "t5_hybrid_rrf", "t6_bm25_indexed", "t7_bm25_incremental",
-      "v4_bpe_merges_incremental", "d20_decontaminate_bloom",
-      "d21_lm_quality_keep", "d22_decontaminate_semantic",
-      "d23_split_by_cluster", "d24_mixture_epochs", "d25_contamination_gate",
-      "s11_ann_ivf_filtered", "s12_ann_ivf_incremental", "m2_media_demux",
-      "dq4_modality_coverage", "n13_frequent_ngrams", "v3_bigram_lm_score",
-      // round 9: kNN-join family (s13's quadratic rung lives in `knn10`,
-      // not here), BPE encode, curriculum order
-      "s14_knn_join_ivf", "s15_mutual_knn_pairs", "v5_bpe_encode",
-      "p6_curriculum_order",
-      // round 10: semantic clusters, planted-positive ANN twins, MP4 frames
-      "s16_mutual_knn_clusters", "s2p_ann_lsh_planted",
-      "s11p_ann_ivf_filtered_planted", "m4_mp4_frames",
-      // round 10 extensions: TPC-H decorrelation family, novelty/affinity,
-      // trigram substring search, vocab growth, novelty gate
-      "q31_customer_order_distribution", "q32_small_qty_revenue",
-      "q33_large_orders", "q34_waiting_suppliers", "q35_excess_shipments",
-      "q36_late_shipment_priority", "q37_dormant_rich_customers",
-      "q38_priority_late_orders", "q39_market_share",
-      "n15_novelty_scores", "d26_source_affinity", "d27_vocab_growth",
-      "d28_novelty_gate", "t8_substring_search",
-      // round 11: the fourth-wave TPC-H close (q40–q44), the partsupp
-      // canon (q45–q49), pruned/indexed retrieval rungs, the PQ ladder,
-      // the planted-twin matrix, and the dup-graph PageRank
-      "q40_returned_item_revenue", "q41_supplier_diversity",
-      "q42_trade_volume", "q43_disjunctive_revenue", "q44_promo_revenue",
-      "q45_min_cost_supplier", "q46_important_stock", "q47_top_supplier",
-      "q48_product_profit", "q49_excess_availability",
-      "t9_bm25_pruned", "t10_substring_incremental", "t11_ql_rank",
-      "s17_ann_pq", "s17p_ann_pq_planted", "s18_ann_ivf_pq",
-      "s4p_ann_ivf_planted", "s6p_ann_ivf_partitioned_planted",
-      "s9p_ann_ivf_quantized_planted", "s12p_ann_ivf_incremental_planted",
-      "s14p_knn_join_ivf_planted", "s18p_ann_ivf_pq_planted",
-      "s19_ann_ivf_pq_filtered", "s19p_ann_ivf_pq_filtered_planted",
-      "g2_dup_pagerank", "d30_token_budget_mixture", "p7_length_bucketed_batches",
-      "t12_proximity_rank", "m5_patch_grid",
-      // round 11 second wave: audio pair, retrieval surfaces, repetition
-      // trim, RFM, block shuffle, bloom-prefiltered join, image histograms
-      "m6_audio_frame_energy", "m7_audio_activity_segments",
-      "m8_image_histogram", "t13_kwic_snippet", "t14_term_cooccurrence",
-      "t15_phrase_indexed", "d31_trim_repeated_ngrams", "u3_rfm_segments",
-      "p8_block_shuffle_order", "q50_bloom_prefilter_join",
-      // round 11 third wave
-      "dq5_drift_profile", "n16_containment_pairs", "g3_label_propagation",
-      "p9_source_interleave", "c3_token_yield", "d32_substring_decontaminate",
-      "d33_drop_reasons", "q51_supplier_busy_days"
-    )
+  private def headlineRehearsal(spark: SparkSession, dst: String): Unit = {
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
-    headline.foreach { name =>
-      val t0 = System.nanoTime()
-      val n  = SparkEntry.queries(name)(spark, dst).collect().length
-      println(f"[rehearsal] $name%-24s rows=$n%-8d ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+    Headline.foreach { name =>
+      timed("rehearsal", name)(SparkEntry.queries(name)(spark, dst).collect().length.toLong)
     }
-    spark.stop()
+  }
+
+  private val Sf01  = "/root/testdata/sf0.1"
+  private val TenX  = "/tmp/graft_sf1ish"
+  private val Docs  = "/tmp/graft_docs100"
+  private val Vec10 = "/tmp/graft_vec10_bitext"
+
+  /** Positional arguments after the mode name: `[src] [dst] [reps] [tenX]`. */
+  private final case class Cli(src: String, dst: String, reps: Int, tenX: String)
+
+  /** A mode over `[src] [dst] [reps]`, plus `[tenX]` when `usesTenX`, with
+    * this mode's defaults. Every directory the mode writes passes one
+    * clobber guard before a session starts: build() and the ensure*
+    * builders wipe a markerless dst, so a swapped invocation must fail
+    * loudly, never delete the source corpus, and the 100× and 10× dirs
+    * must differ or the 10× build would overwrite the 100× corpus and
+    * mislabel every "100x" row.
+    */
+  private def dirs(dst: String, reps: Int = 0, src: String = Sf01, usesTenX: Boolean = false)(
+      run: (SparkSession, Cli) => Unit
+  ): Seq[String] => SparkSession => Unit = a => {
+    val c = Cli(a.lift(0).getOrElse(src), a.lift(1).getOrElse(dst), a.lift(2).map(_.toInt).getOrElse(reps), a.lift(3).getOrElse(TenX))
+    val written = if (usesTenX) Seq(c.dst, c.tenX) else Seq(c.dst)
+    written.foreach(d => require(d != c.src && !c.src.startsWith(d), s"dst $d would clobber src ${c.src}"))
+    require(!usesTenX || c.dst != c.tenX, s"dst ${c.dst} and tenX dst must differ")
+    spark => run(spark, c)
+  }
+
+  /** Mode name → runner over the arguments after the name. */
+  private val modes: Map[String, Seq[String] => SparkSession => Unit] = Map(
+    "lssstream"    -> dirs(TenX)((s, c) => lssStreamRehearsal(s, c.src, c.dst)),
+    "lsstakedown"  -> dirs(TenX)((s, c) => lssTakedownRehearsal(s, c.src, c.dst)),
+    "bandwalk"     -> (a => s => bandWalkRehearsal(s, a.headOption.map(_.toLong).getOrElse(1000000L))),
+    "round14"      -> dirs(Docs, 100, usesTenX = true)((s, c) => round14Rehearsal(s, c.src, c.dst, c.reps, c.tenX)),
+    "round13"      -> dirs(Docs, 100, usesTenX = true)((s, c) => round13Rehearsal(s, c.src, c.dst, c.reps, c.tenX)),
+    "lifecycle100" -> dirs(Docs, 100, usesTenX = true)((s, c) => lifecycleRehearsal(s, c.src, c.dst, c.reps, c.tenX)),
+    "wave100"      -> dirs(Docs, 100, usesTenX = true)((s, c) => wave100Rehearsal(s, c.src, c.dst, c.reps, c.tenX)),
+    "stream10"     -> dirs("/tmp/graft_stream_docs", 10)((s, c) => streamRehearsal(s, c.src, c.dst, c.reps)),
+    "novelty10"    -> dirs("/tmp/graft_stream_docs", 10)((s, c) => noveltyStreamRehearsal(s, c.src, c.dst, c.reps)),
+    "knntakedown"  -> dirs(Vec10)((s, c) => knnTakedownRehearsal(s, c.src, c.dst)), // shares the bitext 10x vec corpus
+    "bitextyield"  -> dirs("/tmp/graft_vec10_yield")((s, c) => bitextYieldRehearsal(s, c.src, c.dst)), // own dir: the plant appends rows
+    // dedicated dst: ensureReplicatedVecs trusts an existing _built marker
+    // regardless of reps, so sharing a dir with a different-reps rehearsal
+    // would silently mislabel the corpus size
+    "bitext"       -> dirs(Vec10)((s, c) => bitextRehearsal(s, c.src, c.dst)),
+    "knn100"       -> dirs("/tmp/graft_knn100", 100)((s, c) => knn100Rehearsal(s, c.src, c.dst, c.reps)),
+    "knn10"        -> dirs(TenX)((s, c) => { build(s, c.src, c.dst, 10); knnRehearsal(s, c.dst) }),
+    "index10"      -> dirs(TenX)((s, c) => { build(s, c.src, c.dst, 10); indexRehearsal(s, c.dst) }),
+    "text100"      -> dirs("/tmp/graft_dedup100", 100)((s, c) => textRehearsal(s, c.src, c.dst, c.reps)),
+    "spans100"     -> dirs("/tmp/graft_dedup100", 100)((s, c) => spansRehearsal(s, c.src, c.dst, c.reps)),
+    "tpchnb"       -> dirs(TenX)((s, c) => tpchNoBroadcastRehearsal(s, c.src, c.dst)),
+    "pressure"     -> (a => s => pressureRehearsal(s, a.headOption.getOrElse(TenX))),
+    "dedup100"     -> dirs("/tmp/graft_dedup100", 100)((s, c) => dedupRehearsal(s, c.src, c.dst, c.reps)),
+    "skew"         -> dirs("/tmp/graft_skew", src = TenX)((s, c) => skewRehearsal(s, c.src, c.dst))
+  )
+
+  /** `ScaleRehearsal <mode> [args]`; without a mode name, the arguments are
+    * `[src] [dst] [reps]` of the 10× build plus the headline timing.
+    */
+  def main(args: Array[String]): Unit = {
+    val job = modes.get(args.headOption.getOrElse("")) match {
+      case Some(mode) => mode(args.toSeq.drop(1))
+      case None       => dirs(TenX, 10)((s, c) => { build(s, c.src, c.dst, c.reps); headlineRehearsal(s, c.dst) })(args.toSeq)
+    }
+    val spark = GraftSession.getOrCreate()
+    try job(spark)
+    finally spark.stop()
   }
 }

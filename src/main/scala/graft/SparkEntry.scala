@@ -39,6 +39,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.q9StarJoin(spark, "/root/testdata/sf0.001")
 
+  /** The names in `names` that are not registered in [[queries]], each
+    * reported on stderr. The one name filter every main (Bench, Runner,
+    * Verify, ExplainDump) runs its query selection through: a mistyped
+    * name exits 2 instead of silently running nothing for it.
+    */
+  def unknownQueries(names: Seq[String]): Seq[String] = {
+    val known   = queries.keySet
+    val unknown = names.filterNot(known)
+    unknown.foreach(n => System.err.println(s"unknown query: $n"))
+    if (unknown.nonEmpty) System.err.println(s"registered queries: ${known.toSeq.sorted.mkString(", ")}")
+    unknown
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_total_count"       -> (CoreQueries.q1TotalCount _),
     "q2_time_filter_count" -> (CoreQueries.q2TimeFilterCount _),

@@ -9,11 +9,12 @@ object Verify {
     // (local iteration on a new operator without re-running the registry).
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, q) => (s, o, Some(q.split(",").toSet))
+      case Array(s, o, q) => (s, o, Some(q.split(",").map(_.trim).filter(_.nonEmpty).toSet))
       case _ =>
         System.err.println("usage: Verify <sfDir> <outDir> [query1,query2,...]")
         sys.exit(2) // : Nothing — unifies the match without a dummy value
     }
+    if (only.exists(names => SparkEntry.unknownQueries(names.toSeq.sorted).nonEmpty)) sys.exit(2)
     val spark = GraftSession.getOrCreate()
     // The oracle SQL bakes in every knob's REGISTERED DEFAULT (n21/n22
     // inline graft.dhash.pair_cap=16, n19 inlines lss.max_tokens=16 and
@@ -38,7 +39,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) => // an OOM must abort the run, not read as a missing output
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -58,23 +58,28 @@ object SketchBounds {
     // codegen HashAggregate path into the sort-based fallback. Split, the
     // exact rollup stays codegen and the HLL pass is a plain single-agg
     // scan; the join is 3 rows. Output identical (same oracle row).
+    //
+    // The join key is (event_type, grouping_id): a NULL event_type in the
+    // data forms its own group whose key is as null as the grand-total
+    // row's, so `<=>` on event_type alone would match those two rows 2×2.
+    // grouping_id() is 0 for a real group and 1 for the total.
     val exact = Tables
       .events(spark, dir)
       .rollup("event_type")
-      .agg(countDistinct(col("user_id")).as("exact_users"))
+      .agg(countDistinct(col("user_id")).as("exact_users"), grouping_id().as("gid"))
     val approx = Tables
       .events(spark, dir)
       .rollup("event_type")
-      .agg(approx_count_distinct(col("user_id"), 0.02).as("approx"))
+      .agg(approx_count_distinct(col("user_id"), 0.02).as("approx"), grouping_id().as("gid"))
     exact
-      .join(approx, exact("event_type") <=> approx("event_type"))
+      .join(approx, exact("event_type") <=> approx("event_type") && exact("gid") === approx("gid"))
+      .orderBy(exact("event_type").asc_nulls_first, exact("gid").desc)
       .select(
         exact("event_type"),
         col("exact_users"),
         (abs(col("approx") - col("exact_users")) <=
           greatest(lit(1L), (col("exact_users") * 0.05).cast("long"))).as("within_bound")
       )
-      .orderBy(asc_nulls_first("event_type"))
   }
 
   /** X3B — x3's approx percentiles vs the 2% RANK-error gate: per group,

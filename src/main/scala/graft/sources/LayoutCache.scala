@@ -87,22 +87,8 @@ object LayoutCache {
     * while leaving each file's name/length/mtime untouched. Digesting
     * names only would serve a stale layout for exactly that edit.
     */
-  def contentKey(spark: SparkSession, src: String, scheme: String): String = {
-    val p  = new Path(src)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(s"$scheme#$src".getBytes("UTF-8"))
-    def add(path: Path, rel: String): Unit = {
-      val st = fs.getFileStatus(path)
-      if (st.isDirectory)
-        fs.listStatus(path)
-          .sortBy(_.getPath.getName)
-          .foreach(c => add(c.getPath, s"$rel/${c.getPath.getName}"))
-      else md.update(s"$rel#${st.getLen}#${st.getModificationTime}".getBytes("UTF-8"))
-    }
-    add(p, "")
-    md.digest().map("%02x".format(_)).mkString.take(12)
-  }
+  def contentKey(spark: SparkSession, src: String, scheme: String): String =
+    Tables.listing(spark, src, salt = s"$scheme#$src")._1.take(12)
 
   /** Return `<root>/<prefix>_<key>`, running `build` first iff the
     * layout's `_SUCCESS` guard is absent. `markSuccess = false` is for

@@ -25,7 +25,7 @@ object Tables {
 
   /** Per-(session, path) cache of ANALYZED reads — every fresh
     * `spark.read.parquet` pays ~0.15 s of file listing + footer/schema
-    * inference at plan-construction time (measured, r21 ProbeProfile),
+    * inference at plan-construction time (measured in r21),
     * which is pure waste when the path's contents haven't changed (the
     * overwhelmingly common case: content-keyed layouts and the corpus
     * dir). Caching the ANALYZED PLAN only: every action on the returned
@@ -34,8 +34,9 @@ object Tables {
     * not computation.
     *
     * VALIDITY: each hit re-digests the path's recursive listing (relative
-    * name, length, mtime — same walk as [[LayoutCache.contentKey]],
-    * measured ~1.4 ms against ~150 ms for a fresh analysis) and rebuilds
+    * name, length, mtime — the [[listing]] walk
+    * [[LayoutCache.contentKey]] also reads, measured ~1.4 ms against
+    * ~150 ms for a fresh analysis) and rebuilds
     * the plan when it moved, so an in-place rewrite (a regenerated corpus,
     * a swept-and-rebuilt layout) can never be served a stale file index —
     * a parquet rewrite mints new part-file names, which the digest always
@@ -46,21 +47,33 @@ object Tables {
   private val frameCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
 
-  private[graft] def listingDigest(spark: SparkSession, path: String): String = {
+  /** ONE recursive walk of `path`: the MD5 over every file's relative
+    * path, length and mtime (directories in sorted name order, after the
+    * optional `salt`), and the total listed bytes. Each child's status
+    * comes from its parent's `listStatus`; only the root pays a
+    * `getFileStatus`. [[listingDigest]], [[LayoutCache.contentKey]] and
+    * [[fanOut]]'s byte gate all read this walk.
+    */
+  private[graft] def listing(spark: SparkSession, path: String, salt: String = ""): (String, Long) = {
     val p  = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val md = java.security.MessageDigest.getInstance("MD5")
-    def add(q: org.apache.hadoop.fs.Path, rel: String): Unit = {
-      val st = fs.getFileStatus(q)
+    md.update(salt.getBytes("UTF-8"))
+    def add(st: org.apache.hadoop.fs.FileStatus, rel: String): Long =
       if (st.isDirectory)
-        fs.listStatus(q)
+        fs.listStatus(st.getPath)
           .sortBy(_.getPath.getName)
-          .foreach(c => add(c.getPath, s"$rel/${c.getPath.getName}"))
-      else md.update(s"$rel#${st.getLen}#${st.getModificationTime}".getBytes("UTF-8"))
-    }
-    add(p, "")
-    md.digest().map("%02x".format(_)).mkString
+          .map(c => add(c, s"$rel/${c.getPath.getName}"))
+          .sum
+      else {
+        md.update(s"$rel#${st.getLen}#${st.getModificationTime}".getBytes("UTF-8"))
+        st.getLen
+      }
+    val bytes = add(fs.getFileStatus(p), "")
+    (md.digest().map("%02x".format(_)).mkString, bytes)
   }
+
+  private[graft] def listingDigest(spark: SparkSession, path: String): String = listing(spark, path)._1
 
   def cachedRead(spark: SparkSession, path: String): DataFrame = {
     val key = s"${System.identityHashCode(spark)}:$path"
@@ -115,35 +128,14 @@ object Tables {
     else df.repartition(spark.sparkContext.defaultParallelism, keys: _*)
   }
 
-  /** Total listed bytes under `path`, memoized per (session, path, listing
-    * digest) — the byte count feeding [[fanOut]]'s size gate. A missing
-    * path reads as "large" (Long.MaxValue/16): the caller's plan then
-    * stays un-fanned and the downstream read reports Spark's canonical
-    * error instead of a listing one here.
+  /** Total listed bytes under `path` — the byte count feeding [[fanOut]]'s
+    * size gate. A missing path reads as "large" (Long.MaxValue/16): the
+    * caller's plan then stays un-fanned and the downstream read reports
+    * Spark's canonical error instead of a listing one here.
     */
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  private def listedBytes(spark: SparkSession, path: String): Long = {
-    val key = s"${System.identityHashCode(spark)}:$path"
-    val digest =
-      try listingDigest(spark, path)
-      catch { case scala.util.control.NonFatal(_) => null }
-    if (digest == null) return Long.MaxValue / 16
-    val hit = bytesCache.get(key)
-    if (hit != null && hit._1 == digest) hit._2
-    else {
-      val p  = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def sz(q: org.apache.hadoop.fs.Path): Long = {
-        val st = fs.getFileStatus(q)
-        if (st.isDirectory) fs.listStatus(q).map(c => sz(c.getPath)).sum else st.getLen
-      }
-      val b = sz(p)
-      bytesCache.put(key, (digest, b))
-      b
-    }
-  }
+  private def listedBytes(spark: SparkSession, path: String): Long =
+    try listing(spark, path)._2
+    catch { case scala.util.control.NonFatal(_) => Long.MaxValue / 16 }
 
   /** Drop every cached plan whose path starts with `pathPrefix` — called by
     * [[LayoutCache]] when a layout directory is built (a concurrent session

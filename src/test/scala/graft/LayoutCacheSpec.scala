@@ -33,6 +33,28 @@ class LayoutCacheSpec extends SparkSpec {
       Files.writeString(Paths.get(out, "data.txt"), s"payload-$key")
     }
 
+  test("contentKey over a two-level directory: one listing walk, stable, sees a nested length change") {
+    val dir    = Files.createTempDirectory("graft_lc_walk")
+    val nested = dir.resolve("day=2024-01-02")
+    Files.createDirectories(nested)
+    Files.writeString(dir.resolve("part-0.parquet"), "top")
+    Files.writeString(nested.resolve("part-1.parquet"), "nested v1")
+    val k1 = LayoutCache.contentKey(spark, dir.toString, "walk-v1")
+    assert(LayoutCache.contentKey(spark, dir.toString, "walk-v1") == k1)
+    // byte-identical to the per-file definition: scheme#src, then each
+    // file's relative path, length and mtime in sorted depth-first order
+    def entry(rel: String, f: java.nio.file.Path) =
+      s"$rel#${Files.size(f)}#${Files.getLastModifiedTime(f).toMillis}"
+    val md = java.security.MessageDigest.getInstance("MD5")
+    Seq(s"walk-v1#$dir", entry("/day=2024-01-02/part-1.parquet", nested.resolve("part-1.parquet")),
+      entry("/part-0.parquet", dir.resolve("part-0.parquet"))).foreach(e => md.update(e.getBytes("UTF-8")))
+    assert(k1 == md.digest().map("%02x".format(_)).mkString.take(12))
+    val (_, bytes) = graft.sources.Tables.listing(spark, dir.toString)
+    assert(bytes == "top".length + "nested v1".length)
+    Files.writeString(nested.resolve("part-1.parquet"), "nested v2, longer")
+    assert(LayoutCache.contentKey(spark, dir.toString, "walk-v1") != k1)
+  }
+
   test("layout root follows the graft.layout.dir knob") {
     withLayoutConf() { dir =>
       val p = build("graft_lc_root", "aaaaaaaaaaaa")

@@ -34,23 +34,6 @@ class SkewSpec extends SparkSpec {
   // functions and salting is the remaining lever for holistic state.
   // ---------------------------------------------------------------------
 
-  /** Max/mean shuffle-read bytes over the tasks of the last measured
-    * action — the straggler factor (ScaleRehearsal's TaskBalance shape).
-    */
-  private class Balance extends org.apache.spark.scheduler.SparkListener {
-    private val lock = new Object
-    private var mx   = 0L; private var sum = 0L; private var n = 0L
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        val r = m.shuffleReadMetrics.totalBytesRead
-        if (r > 0) lock.synchronized { mx = math.max(mx, r); sum += r; n += 1 }
-      }
-    }
-    def reset(): Unit = lock.synchronized { mx = 0; sum = 0; n = 0 }
-    def max: Long     = lock.synchronized(mx)
-  }
-
   private def withSkewConfs[A](body: => A): A = {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -73,11 +56,13 @@ class SkewSpec extends SparkSpec {
     }
   }
 
-  private def measured[A](bal: Balance)(action: => A): (A, Long) = {
-    bal.reset()
-    val r = action
-    Thread.sleep(300) // drain listener events for this phase
-    (r, bal.max)
+  /** The action's value and its largest single-task shuffle read — the
+    * straggler factor, read from the [[Measure]] listener.
+    */
+  private def measured[A](action: => A): (A, Long) = {
+    val before = Measure.snapshot(spark)
+    val r      = action
+    (r, Measure.listener(spark).reducerMax(before, Measure.snapshot(spark)))
   }
 
   // one hot key carrying ~95% of the rows, wide enough payload that the
@@ -91,16 +76,14 @@ class SkewSpec extends SparkSpec {
 
   test("skewed JOIN: AQE alone splits the hot partition — no salt rewrite required") {
     import spark.implicits._
-    val bal = new Balance
-    spark.sparkContext.addSparkListener(bal)
-    try withSkewConfs {
+    withSkewConfs {
       val small = (0L to 99L).map(kk => (kk, s"dim_$kk")).toDF("k2", "name")
       def join()  = skewedBig.join(small, col("k") === col("k2")).select("k", "payload", "name")
       // AQE skew split ON: result is the plain join's, and the final plan
       // carries the split marker
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       val dfOn           = join()
-      val (cntOn, maxOn) = measured(bal)(dfOn.collect().length.toLong)
+      val (cntOn, maxOn) = measured(dfOn.collect().length.toLong)
       // the plan must be read from the EXECUTED query (collect above), not
       // a fresh action's — AQE finalizes the plan per execution
       assert(dfOn.queryExecution.executedPlan.toString.contains("skew=true"), "AQE did not mark the join skewed")
@@ -108,41 +91,37 @@ class SkewSpec extends SparkSpec {
       // reads several times more than any post-split task
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
       val dfOff            = join()
-      val (cntOff, maxOff) = measured(bal)(dfOff.collect().length.toLong)
+      val (cntOff, maxOff) = measured(dfOff.collect().length.toLong)
       assert(!dfOff.queryExecution.executedPlan.toString.contains("skew=true"))
       assert(cntOn == cntOff && cntOn > 0)
       assert(
         maxOff > 3 * maxOn,
         s"skew split shows no reducer-balance win: max=$maxOff bytes without vs $maxOn with"
       )
-    } finally spark.sparkContext.removeSparkListener(bal)
+    }
   }
 
   test("skewed ALGEBRAIC agg: partial aggregation absorbs the hot key — no salt, no AQE needed") {
-    val bal = new Balance
-    spark.sparkContext.addSparkListener(bal)
-    try withSkewConfs {
+    withSkewConfs {
       // count/sum combine map-side: each mapper emits ONE row per key, so
       // the hot reducer reads rows ~ #mappers, not rows ~ corpus — the
       // fattest reducer stays within a small factor of the rest
-      val (_, maxAgg) = measured(bal)(
+      val (_, maxAgg) = measured(
         skewedBig.groupBy("k").agg(count(lit(1)).as("n"), sum(length(col("payload"))).as("bytes")).collect()
       )
       // the JOIN shuffle of the same corpus moves the full hot partition;
       // the algebraic agg's biggest read must be far below that
       val hotBytes = 190000L * 32L // lower bound on the hot key's payload bytes
       assert(maxAgg < hotBytes / 4, s"partial aggregation did not absorb the skew: max read $maxAgg bytes")
-    } finally spark.sparkContext.removeSparkListener(bal)
+    }
   }
 
   test("skewed HOLISTIC agg: AQE cannot split it; salting the build stage balances the reducers") {
-    val bal = new Balance
-    spark.sparkContext.addSparkListener(bal)
-    try withSkewConfs {
+    withSkewConfs {
       // collect_list state is the rows themselves — partial aggregation
       // reduces nothing and AQE may not split the partition (every row of
       // a key must co-locate), so one reducer reads ~ the whole hot key
-      val (_, maxPlain) = measured(bal)(
+      val (_, maxPlain) = measured(
         skewedBig.groupBy("k").agg(collect_list("payload").as("ps")).collect()
       )
       // salted build stage: (k, salt) spreads the hot key's list-building
@@ -152,11 +131,11 @@ class SkewSpec extends SparkSpec {
         .withColumn("__salt", pmod(xxhash64(col("payload")), lit(8)).cast("int"))
         .groupBy("k", "__salt")
         .agg(collect_list("payload").as("ps"))
-      val (_, maxSalted) = measured(bal)(salted.collect())
+      val (_, maxSalted) = measured(salted.collect())
       assert(
         maxPlain > 3 * maxSalted,
         s"salt shows no balance win on holistic state: plain max=$maxPlain vs salted max=$maxSalted"
       )
-    } finally spark.sparkContext.removeSparkListener(bal)
+    }
   }
 }

@@ -13,9 +13,35 @@ Verdict policy (per query, on medians):
                 narrow-spread query -- not explainable by recorded noise
 
 Exit code 1 iff any query REGRESSED (so CI/driver use is one line).
+
+For every REGRESSED or JITTER query whose two records both carry per-query
+counters (graft.Bench's `counters` map), one more line prints the counter
+deltas -- jobs, task_s, cpu_s, shuffle MB, spill MB -- so a regression says
+which layer moved. The counters do not change the verdict.
 """
 import json
 import sys
+
+# (label, counters key or keys summed) for the layer line
+LAYERS = [
+    ("jobs", ("jobs",)),
+    ("task_s", ("task_s",)),
+    ("cpu_s", ("cpu_s",)),
+    ("shuffle_mb", ("shuffle_read_mb", "shuffle_write_mb")),
+    ("spill_mb", ("spill_mb",)),
+]
+
+
+def layer_line(q, old, new):
+    """Per-layer deltas of one query, or None when either record lacks them."""
+    if old is None or new is None:
+        return None
+    parts = []
+    for label, keys in LAYERS:
+        a = sum(old.get(k, 0) for k in keys)
+        b = sum(new.get(k, 0) for k in keys)
+        parts.append(f"{label} {a:g} -> {b:g} ({b - a:+.3g})")
+    return f"         {q} layers: " + ", ".join(parts)
 
 
 def main() -> int:
@@ -25,6 +51,8 @@ def main() -> int:
     committed = json.load(open(sys.argv[1]))
     fresh = json.load(open(sys.argv[2]))
     spread = committed.get("spread", {})
+    old_counters = committed.get("counters", {})
+    new_counters = fresh.get("counters", {})
     regressed, jitter = [], []
     for q, med in sorted(committed["queries"].items()):
         new = fresh["queries"].get(q)
@@ -47,6 +75,9 @@ def main() -> int:
             regressed.append(q)
             print(f"REGRESSED {q}: fresh {new:.2f}s vs committed med {med:.2f}s "
                   f"max {sp['max']:.2f}s")
+        layers = layer_line(q, old_counters.get(q), new_counters.get(q))
+        if layers:
+            print(layers)
     n = len(committed["queries"])
     print(f"total: committed {committed['value']:.1f}s fresh {fresh['value']:.1f}s over {n} queries; "
           f"{len(regressed)} regressed, {len(jitter)} known-noisy outliers")
