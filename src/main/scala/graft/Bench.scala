@@ -10,11 +10,11 @@ package graft
   *
   * Methodology mirrors the reference's stopwatch instrumentation
   * (`QueryOrchestration.cs:425-439`): one JVM-warmup action first, then an
-  * explicit LAYOUT PHASE ([[Layouts.buildAll]]) forcing every ingest-time
-  * derived layout — each build separately timed and flagged built-vs-reused
-  * in the JSON (`layout_phase_secs` / `layouts` / `late_builds`) — then each
-  * query is timed end-to-end (plan + execute + collect) against warm
-  * layouts. `collect()` rather than `count()` so column pruning cannot skip
+  * explicit LAYOUT PHASE ([[Layouts.buildAll]]) forcing the derived layouts
+  * the selected [[QuerySpec]] rows declare — each build separately timed and
+  * flagged built-vs-reused in the JSON (`layout_phase_secs` / `layouts`) —
+  * then each query is timed end-to-end (plan + execute + collect) against
+  * warm layouts. `collect()` rather than `count()` so column pruning cannot skip
   * the projected work; all query results are small (aggregates / top-k /
   * per-doc stats).
   *
@@ -40,22 +40,29 @@ package graft
   * listener stays attached for the whole run; its bus drain and snapshot
   * run between queries, outside the timed reps.
   *
-  * Usage: `runMain graft.Bench [queryName ...]` — names select a subset
-  * (the layout phase and sentinels still run in full); an unknown name
-  * exits 2.
+  * A layout built DURING the query section is one the layout phase missed:
+  * `late_builds` maps each query that built one to `{layout dir: secs}`,
+  * drained after the query's reps, outside the timed region — so a missing
+  * `layouts` declaration names the query that lacks it.
+  *
+  * Usage: `runMain graft.Bench [queryName ...]` — names select a subset,
+  * and a subset forces only its own rows' layouts (the sentinels still run
+  * in full); an unknown name exits 2.
   */
 object Bench {
   /** One query's record: median/min/max/first-rep seconds (all -1 when the
-    * first rep failed) and its per-rep counter averages.
+    * first rep failed), its per-rep counter averages and the layouts it
+    * built (layout dir -> build seconds).
     */
-  private final case class QueryRun(name: String, med: Double, min: Double, max: Double, first: Double, counters: Option[Measure.Counters])
+  private final case class QueryRun(name: String, med: Double, min: Double, max: Double, first: Double,
+      counters: Option[Measure.Counters], lateBuilds: Seq[(String, Double)])
 
   def main(args: Array[String]): Unit = {
     if (SparkEntry.unknownQueries(args.toSeq).nonEmpty) sys.exit(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.getOrCreate()
     Measure.listener(spark) // attached for the whole run
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => args.isEmpty || args.contains(q._1))
+    val selected = SparkEntry.registry.sortBy(_.name).filter(r => args.isEmpty || args.contains(r.name))
 
     // JVM/codegen warmup on a trivial plan plus one 1-row touch of each
     // table family (parquet reader + vectorized decode init) — without the
@@ -112,7 +119,7 @@ object Bench {
     }
 
     var membwPre = membwLast
-    // Layout pre-build: force every ingest-time derived layout in an
+    // Layout pre-build: force the selected rows' derived layouts in an
     // explicit, separately-timed phase (the reference's cold/warm split,
     // QueryOrchestration.cs:425-439, applied at the layout level). Without
     // this, whichever query first touches a cold layout silently absorbs
@@ -120,7 +127,7 @@ object Bench {
     // section below therefore measures warm layouts by construction, and
     // the JSON records what each build cost and whether it ran at all.
     val lt0     = System.nanoTime()
-    val layouts = Layouts.buildAll(spark, sfDir)
+    val layouts = Layouts.buildAll(spark, sfDir, selected.flatMap(_.layouts).toSet)
     val layoutPhaseSecs = (System.nanoTime() - lt0) / 1e9
 
     val Reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
@@ -128,10 +135,11 @@ object Bench {
     // broken operator costs one attempt, not three, and still reads as
     // failed.
     def measureQueries(): Seq[QueryRun] =
-      selected.map { case (name, fn) =>
+      selected.map { row =>
+        val name = row.name
         def once(): Double = {
           val t0 = System.nanoTime()
-          fn(spark, sfDir).collect()
+          row.run(spark, sfDir).collect()
           (System.nanoTime() - t0) / 1e9
         }
         val before = Measure.snapshot(spark)
@@ -143,19 +151,15 @@ object Bench {
             case scala.util.control.NonFatal(e) =>
               System.err.println(s"[bench] $name failed: $e"); Seq.empty[Double]
           }
-        if (times.isEmpty) QueryRun(name, -1.0, -1.0, -1.0, -1.0, None)
+        val late = graft.sources.LayoutCache.drainBuildLog()
+        if (times.isEmpty) QueryRun(name, -1.0, -1.0, -1.0, -1.0, None, late)
         else {
           val perRep = (Measure.snapshot(spark) - before) / times.size
           val sorted = times.sorted
-          QueryRun(name, sorted(sorted.size / 2), sorted.head, sorted.last, times.head, Some(perRep))
+          QueryRun(name, sorted(sorted.size / 2), sorted.head, sorted.last, times.head, Some(perRep), late)
         }
       }
     var results = measureQueries()
-    // A build event DURING the query section means a layout the pre-build
-    // phase missed — report it rather than let it hide in a query's time.
-    // Drained PER ATTEMPT so a whole-run retry below doesn't misattribute
-    // attempt 1's late builds to the kept measurement.
-    var lateBuildRows = graft.sources.LayoutCache.drainBuildLog()
     // Post-run probe: pre-run quiet does not prove the QUERY SECTION ran
     // quiet (the r17 record's contention arrived mid-run). WHOLE-RUN RETRY
     // (VERDICT r19 item 5): the pre-run gate cannot see load that arrives
@@ -190,14 +194,14 @@ object Bench {
       }
       // the discarded attempt's late builds are a pre-build-gap signal the
       // kept record would otherwise silently drop (ADVICE r20) — log them
-      if (lateBuildRows.nonEmpty)
+      results.filter(_.lateBuilds.nonEmpty).foreach { r =>
         System.err.println(
-          s"[bench] attempt $runAttempts late_builds (discarded with its measurements): " +
-            lateBuildRows.map { case (n, s) => f"$n=$s%.3f" }.mkString(", ")
+          s"[bench] attempt $runAttempts late_builds of ${r.name} (discarded with its measurements): " +
+            r.lateBuilds.map { case (n, s) => f"$n=$s%.3f" }.mkString(", ")
         )
+      }
       membwPre = membwLast // the retry's own pre-probe pair brackets the kept attempt
       results = measureQueries()
-      lateBuildRows = graft.sources.LayoutCache.drainBuildLog()
       sentinelPost = sentinelProbes(spark)
       runAttempts += 1
     }
@@ -210,7 +214,7 @@ object Bench {
       )
       .mkString("{", ",", "}")
     val countersJson = results
-      .collect { case QueryRun(k, _, _, _, _, Some(c)) =>
+      .collect { case QueryRun(k, _, _, _, _, Some(c), _) =>
         "\"" + k + "\":" +
           f"""{"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"task_s":${c.taskMs / 1e3}%.3f,""" +
           f""""cpu_s":${c.cpuMs / 1e3}%.3f,"gc_s":${c.gcMs / 1e3}%.3f,"shuffle_read_mb":${c.shuffleReadB / 1048576.0}%.3f,""" +
@@ -219,8 +223,11 @@ object Bench {
       .mkString("{", ",", "}")
     val failed = results.collect { case r if r.med < 0 => "\"" + r.name + "\"" }
     val total  = results.map(_.med).filter(_ >= 0).sum
-    val lateBuilds = lateBuildRows
-      .map { case (n, s) => "\"" + n + "\":" + f"$s%.3f" }
+    val lateBuilds = results
+      .filter(_.lateBuilds.nonEmpty)
+      .map(r =>
+        "\"" + r.name + "\":" + r.lateBuilds.map { case (n, s) => "\"" + n + "\":" + f"$s%.3f" }.mkString("{", ",", "}")
+      )
       .mkString("{", ",", "}")
     val layoutJson = layouts
       .map(r =>

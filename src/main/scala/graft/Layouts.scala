@@ -11,12 +11,14 @@ import org.apache.spark.sql.SparkSession
   * the bucketed fact/event tables).
   *
   * [[buildAll]] exists for one reason: a benchmark (or a fresh deployment)
-  * must be able to force every layout in an EXPLICIT, separately-timed phase
+  * must be able to force its layouts in an EXPLICIT, separately-timed phase
   * instead of paying builds invisibly inside whichever query happens to run
   * first — the reference's cold/warm split (`QueryOrchestration.cs:425-439`)
   * applied at the layout level. Each forcer calls the same operator entry
   * points the queries use, at the session's knob operating points, so the
-  * cache keys are identical to what the query phase will look up.
+  * cache keys are identical to what the query phase will look up. Each
+  * [[QuerySpec]] names the forcers whose layouts it reads, so a run over
+  * some of the registry forces only those.
   */
 object Layouts {
 
@@ -77,9 +79,10 @@ object Layouts {
     "bucketed_events"    -> (() => { BucketedFacts.eventsByUser(spark, dir); () })
   )
 
-  /** Force every layout for `dir`, attributing [[LayoutCache]] build events
-    * to the forcer that triggered them. A reused layout reports
-    * `built = false, buildSecs = 0`.
+  /** Run the forcers named in `names` for `dir` (every forcer, for a full
+    * registry run), attributing [[LayoutCache]] build events to the forcer
+    * that triggered them. A reused layout reports `built = false,
+    * buildSecs = 0`.
     *
     * Forcers run CONCURRENTLY on a small fixed pool
     * (`graft.layout.build.parallelism`, default 6; 1 = the old sequential
@@ -99,9 +102,9 @@ object Layouts {
     * transitive dependencies it won the race for). Job descriptions are
     * thread-local in Spark, so the UI labels stay per-forcer.
     */
-  def buildAll(spark: SparkSession, dir: String): Seq[LayoutReport] = {
+  def buildAll(spark: SparkSession, dir: String, names: Set[String]): Seq[LayoutReport] = {
     val par = math.max(1, graft.GraftConf.int(spark, "layout.build.parallelism", 6))
-    val fcs = forcers(spark, dir)
+    val fcs = forcers(spark, dir).filter { case (name, _) => names(name) }
     if (par == 1) {
       LayoutCache.drainBuildLog() // start attribution from a clean slate
       fcs.map { case (name, force) =>

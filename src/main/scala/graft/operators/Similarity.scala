@@ -752,9 +752,17 @@ object Similarity {
     * unsupported (the close gate is strictly sequential per SF) — but
     * the version dirs themselves are immutable, so the loser's data is
     * intact and one re-run repoints.
+    *
+    * RETENTION: a repoint deletes the `sub`'s version dirs other than the
+    * new target and the previous one, so a reader that resolved the old
+    * link keeps its data while the directory stays bounded.
     */
-  private def exportForOracle(srcDir: String, sub: String): Unit = synchronized {
+  private[graft] def exportForOracle(srcDir: String, sub: String): Unit = synchronized {
     import java.nio.file._
+    def rmTree(p: Path): Unit = {
+      val it = Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]()).iterator()
+      while (it.hasNext) Files.delete(it.next())
+    }
     val src  = Paths.get(srcDir)
     val link = Paths.get(OracleArtifactDir, sub)
     // version key: the source layout path (content-keyed by LayoutCache)
@@ -776,14 +784,12 @@ object Similarity {
           .getBytes("UTF-8")
       )
     }
-    val ver = lmd.digest().map("%02x".format(_)).mkString.take(16)
-    val verDir = Paths.get(OracleArtifactDir, ".versions", s"${sub.replace('/', '_')}-$ver")
+    val ver     = lmd.digest().map("%02x".format(_)).mkString.take(16)
+    val verName = sub.replace('/', '_')
+    val verDir  = Paths.get(OracleArtifactDir, ".versions", s"$verName-$ver")
     if (!Files.exists(verDir.resolve("_done"))) {
       val tmp = Paths.get(verDir.toString + ".tmp")
-      if (Files.exists(tmp)) {
-        val it = Files.walk(tmp).sorted(java.util.Comparator.reverseOrder[Path]()).iterator()
-        while (it.hasNext) Files.delete(it.next())
-      }
+      if (Files.exists(tmp)) rmTree(tmp)
       Files.createDirectories(tmp)
       val files = Files.walk(src).filter(p => Files.isRegularFile(p)).iterator()
       while (files.hasNext) {
@@ -796,17 +802,22 @@ object Similarity {
       try Files.move(tmp, verDir, StandardCopyOption.ATOMIC_MOVE)
       catch { case _: FileAlreadyExistsException => () } // concurrent exporter won
     }
-    if (Files.isSymbolicLink(link) && Files.readSymbolicLink(link) == verDir) return
+    val prev = if (Files.isSymbolicLink(link)) Some(Files.readSymbolicLink(link)) else None
+    if (prev.contains(verDir)) return
     if (link.getParent != null) Files.createDirectories(link.getParent)
-    if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && !Files.isSymbolicLink(link)) {
-      // a plain directory from the pre-symlink export scheme
-      val it = Files.walk(link).sorted(java.util.Comparator.reverseOrder[Path]()).iterator()
-      while (it.hasNext) Files.delete(it.next())
-    }
+    // a plain directory from the pre-symlink export scheme
+    if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && prev.isEmpty) rmTree(link)
     val tmpLink = link.resolveSibling(link.getFileName.toString + ".lnk")
     Files.deleteIfExists(tmpLink)
     Files.createSymbolicLink(tmpLink, verDir)
     Files.move(tmpLink, link, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val versionOfSub = ("^" + java.util.regex.Pattern.quote(verName) + "-[0-9a-f]{16}$").r
+    val versions = Files.list(verDir.getParent)
+    try versions.iterator().forEachRemaining { p =>
+      if (versionOfSub.matches(p.getFileName.toString) && p != verDir && !prev.contains(p))
+        scala.util.Try(rmTree(p)) // a concurrent exporter may be sweeping too
+    }
+    finally versions.close()
   }
 
   private[operators] def ivfLayoutCache(spark: SparkSession, dir: String, nClusters: Int): String = {

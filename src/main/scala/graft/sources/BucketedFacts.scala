@@ -35,8 +35,8 @@ object BucketedFacts {
     val lKey   = LayoutCache.contentKey(spark, s"$dir/lineitem.parquet", scheme)
     val oKey   = LayoutCache.contentKey(spark, s"$dir/orders.parquet", scheme)
     (
-      attach(spark, s"graft_lineitem_bk_$lKey", Tables.lineitem(spark, dir), "l_orderkey", nBuckets),
-      attach(spark, s"graft_orders_bk_$oKey", Tables.orders(spark, dir), "o_orderkey", nBuckets)
+      attach(spark, "graft_lineitem_bk", lKey, Tables.lineitem(spark, dir), "l_orderkey", nBuckets),
+      attach(spark, "graft_orders_bk", oKey, Tables.orders(spark, dir), "o_orderkey", nBuckets)
     )
   }
 
@@ -54,23 +54,27 @@ object BucketedFacts {
   def eventsByUser(spark: SparkSession, dir: String, nBuckets: Int = 8): String = {
     val scheme = s"bk-v$BucketSchemeVersion#u$nBuckets"
     val key    = LayoutCache.contentKey(spark, s"$dir/events.parquet", scheme)
-    attach(spark, s"graft_events_bku_$key", Tables.eventsRaw(spark, dir), "user_id", nBuckets, sortCols = Seq("user_id", "ts"))
+    attach(spark, "graft_events_bku", key, Tables.eventsRaw(spark, dir), "user_id", nBuckets, sortCols = Seq("user_id", "ts"))
   }
 
-  /** Ensure catalog table `name` exists: reuse the already-registered table,
-    * re-attach persisted bucket files via DDL, or write them (bucketed,
-    * per-bucket sorted) if absent. The key in `name` fingerprints source
-    * content + scheme, so a name can never resolve to stale data.
+  /** Ensure catalog table `<prefix>_<key>` exists: reuse the
+    * already-registered table, re-attach persisted bucket files via DDL, or
+    * write them (bucketed, per-bucket sorted) if absent. The key
+    * fingerprints source content + scheme, so a name can never resolve to
+    * stale data.
     */
   private def attach(
       spark: SparkSession,
-      name: String,
+      prefix: String,
+      key: String,
       src: DataFrame,
       bucketCol: String,
       nBuckets: Int,
       sortCols: Seq[String] = Seq.empty
   ): String = {
+    val name = s"${prefix}_$key"
     val sort = if (sortCols.nonEmpty) sortCols else Seq(bucketCol)
+    LayoutCache.recordTouch(prefix)
     if (!spark.catalog.tableExists(name)) {
       val out = new Path(LayoutCache.root(spark), name)
       val fs  = out.getFileSystem(spark.sparkContext.hadoopConfiguration)

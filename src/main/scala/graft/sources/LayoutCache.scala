@@ -78,6 +78,19 @@ object LayoutCache {
   def drainBuildLog(): Seq[(String, Double)] =
     buildLog.synchronized { val r = buildLog.toList; buildLog.clear(); r }
 
+  // Layout prefixes resolved since the last drain ([[getOrBuild]] and the
+  // bucketed tables), on a hit as well as a build — which layout families a
+  // query READS, as opposed to `buildLog`'s which ones it had to build. A
+  // set, so an undrained log stays bounded by the number of prefixes.
+  private val touchLog = scala.collection.mutable.Set.empty[String]
+
+  private[graft] def recordTouch(prefix: String): Unit =
+    touchLog.synchronized { touchLog += prefix; () }
+
+  /** Return and clear the layout prefixes touched since the last drain. */
+  def drainTouchLog(): Set[String] =
+    touchLog.synchronized { val r = touchLog.toSet; touchLog.clear(); r }
+
   /** 12-hex digest of `scheme` + the recursive file listing under `src`
     * (each file contributes its path RELATIVE to `src`, byte length, and
     * mtime; directories recurse in sorted order). The relative path — not
@@ -104,6 +117,7 @@ object LayoutCache {
     val out     = new Path(root(spark), s"${prefix}_$key")
     val fs      = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val success = new Path(out, "_SUCCESS")
+    recordTouch(prefix)
     if (fs.exists(success)) {
       // best-effort: a filesystem that refuses setTimes degrades to FIFO
       Try(fs.setTimes(success, System.currentTimeMillis(), -1))

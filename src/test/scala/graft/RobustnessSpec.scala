@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{TopKByScore, VectorFunctions}
+import graft.sources.LayoutCache
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -217,42 +218,17 @@ class RobustnessSpec extends SparkSpec {
         .limit(0)
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
-    // Layout-building ops that legitimately cannot produce their derived
-    // layout from zero rows (an empty partitioned/clustered write leaves
-    // nothing to re-read). At 100 TB "the corpus is empty" is an upstream
-    // failure these should fail LOUDLY on, not mask — so they stay throws.
-    // s17 joins the quantizer family: PQ codebooks train on seed vectors,
-    // and zero rows to train on is the same upstream failure. (s17p stays
-    // OUT of the list — the committed fixture union keeps it answerable.)
-    // s18 composes the IVF directory with the PQ codebooks, so it inherits
-    // BOTH training-on-zero-rows failures and stays a throw for the same
-    // reason s4/s17 do.
-    // s12p shares s12's exemption: its BASE layout is trained on the corpus
-    // alone (the whole point — the fixture arrives only through the delta),
-    // so zero corpus rows is the same train-on-nothing upstream failure.
-    // The other planted twins stay OUT: their union layouts include the
-    // committed fixture, which keeps them answerable.
-    // s20p inherits s12p's exemption: its base layout (the fold input) is
-    // trained on the corpus alone, so zero corpus rows is the same
-    // train-on-nothing upstream failure.
-    // b2 retrieves through the ivf16 directory, whose quantizer trains on
-    // the corpus embeddings — zero rows to train on is the same upstream
-    // failure as s4/s14. (b1, the exact comparator, stays OUT: a cross
-    // join over zero rows degrades to an empty pair set.)
-    val exempt = Set("p1_partitioned_time_count", "s4_ann_ivf",
-      "s6_ann_ivf_partitioned", "s9_ann_ivf_quantized", "s11_ann_ivf_filtered",
-      "s12_ann_ivf_incremental", "s12p_ann_ivf_incremental_planted",
-      "s20p_ann_ivf_compacted_planted",
-      "s14_knn_join_ivf", "s17_ann_pq", "s18_ann_ivf_pq",
-      "s19_ann_ivf_pq_filtered", "b2_bitext_margin_ivf")
+    // Rows declaring `emptyInput = Throws(reason)` cannot produce their
+    // derived layout from zero rows; every other row must degrade.
+    val exempt = SparkEntry.registry.collect { case QuerySpec(n, _, _, _, QuerySpec.Throws(_)) => n }.toSet
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try { fn(spark, dir).collect(); None }
       catch { case e: Throwable => Some(name -> e.toString.takeWhile(_ != '\n')) }
     }
     val unexpected = failures.filterNot { case (n, _) => exempt(n) }
     assert(unexpected.isEmpty, s"unexpected empty-input failures: $unexpected")
-    // the exemption list must not go stale: every exempted op still throws
-    // here, or it has learned to degrade and must leave the list
+    // the exemptions must not go stale: every exempted op still throws
+    // here, or it has learned to degrade and its row must say so
     val stale = exempt -- failures.map(_._1).toSet
     assert(stale.isEmpty, s"exempted ops that no longer fail on empty input: $stale")
   }
@@ -291,11 +267,37 @@ class RobustnessSpec extends SparkSpec {
     // tolerate null/empty/short cells. The round-8 staleness audit showed
     // the old layout-op exemption set (p1, q23, s4, s6, s9) had gone
     // entirely stale; an empty set keeps it that way.
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, dir).collect(); None }
-      catch { case e: Throwable => Some(name -> e.toString.takeWhile(_ != '\n')) }
+    //
+    // The same sweep checks each row's `layouts` declaration against the
+    // layout prefixes LayoutCache sees resolved. The forcers run first, on
+    // the fresh copy, so each one's touched set includes the dependencies
+    // its build pulls in; the queries then read warm layouts, so each
+    // one's touched set is exactly what it reads.
+    def attempt(name: String)(body: => Unit): (Option[(String, String)], Set[String]) = {
+      val failure =
+        try { body; None }
+        catch { case e: Throwable => Some(name -> e.toString.takeWhile(_ != '\n')) }
+      (failure, LayoutCache.drainTouchLog())
     }
+    LayoutCache.drainTouchLog()
+    val forced = Layouts.forcers(spark, dir).map { case (name, force) => name -> attempt(s"layout $name")(force()) }
+    val swept  = SparkEntry.registry.sortBy(_.name).map(r => r -> attempt(r.name)(r.run(spark, dir).collect()))
+    val failures = (forced ++ swept).flatMap(_._2._1)
     assert(failures.isEmpty, s"unexpected messy-input failures: $failures")
+    val forcerReads = forced.map { case (name, (_, touched)) => name -> touched }.toMap
+    val unknown = SparkEntry.registry.flatMap(r => r.layouts.filterNot(forcerReads.contains).map(r.name -> _))
+    assert(unknown.isEmpty, s"declared layouts that are not Layouts.forcers names: $unknown")
+    val uncovered = swept.flatMap { case (r, (_, reads)) =>
+      val missing = reads -- r.layouts.flatMap(forcerReads)
+      if (missing.isEmpty) None else Some(r.name -> missing)
+    }
+    assert(uncovered.isEmpty, s"layouts read but covered by no declared forcer: $uncovered")
+    val stale = swept.flatMap { case (r, (_, reads)) =>
+      r.layouts.filter(f => (forcerReads(f) & reads).isEmpty).map(r.name -> _)
+    }
+    assert(stale.isEmpty, s"declared forcers the query does not read: $stale")
+    val undeclared = forcerReads.keySet -- SparkEntry.registry.flatMap(_.layouts)
+    assert(undeclared.isEmpty, s"forcers no row declares: $undeclared")
   }
 
   test("config-driven Runner: properties file selects data dir + queries, results land as parquet") {

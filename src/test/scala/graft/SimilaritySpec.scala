@@ -893,4 +893,33 @@ class SimilaritySpec extends SparkSpec {
     val total = 3 * expected.size
     assert(hits * 10 >= total * 5, s"kNN-join recall@3 too low: $hits/$total")
   }
+
+  test("oracle export keeps two version dirs per artifact and points at the newest") {
+    import java.nio.file.{Files, Path, Paths}
+    val sub  = s"retention-spec-${System.nanoTime()}/t.parquet"
+    val name = sub.replace('/', '_')
+    def versions(): Seq[Path] = {
+      val ls = Files.list(Paths.get(Similarity.OracleArtifactDir, ".versions"))
+      try ls.toArray.toSeq.map(_.asInstanceOf[Path]).filter(_.getFileName.toString.startsWith(s"$name-"))
+      finally ls.close()
+    }
+    val srcs = (1 to 3).map { i =>
+      val d = Files.createTempDirectory("graft_export")
+      Files.writeString(d.resolve("part-0.parquet"), s"content $i")
+      d
+    }
+    val link = Paths.get(Similarity.OracleArtifactDir, sub)
+    try {
+      srcs.foreach(d => Similarity.exportForOracle(d.toString, sub))
+      assert(versions().size == 2)
+      assert(versions().contains(Files.readSymbolicLink(link)))
+      assert(Files.readString(link.resolve("part-0.parquet")) == "content 3")
+    } finally {
+      Files.deleteIfExists(link)
+      Files.deleteIfExists(link.getParent)
+      versions().foreach { v =>
+        Files.walk(v).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      }
+    }
+  }
 }

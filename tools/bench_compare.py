@@ -18,6 +18,10 @@ For every REGRESSED or JITTER query whose two records both carry per-query
 counters (graft.Bench's `counters` map), one more line prints the counter
 deltas -- jobs, task_s, cpu_s, shuffle MB, spill MB -- so a regression says
 which layer moved. The counters do not change the verdict.
+
+A record with a non-empty `late_builds` (layouts built inside the query
+section, i.e. missing from a query's declared layouts) gets one line per
+query that built one. These do not change the verdict either.
 """
 import json
 import sys
@@ -42,6 +46,12 @@ def layer_line(q, old, new):
         b = sum(new.get(k, 0) for k in keys)
         parts.append(f"{label} {a:g} -> {b:g} ({b - a:+.3g})")
     return f"         {q} layers: " + ", ".join(parts)
+
+
+def late_build_lines(label, record):
+    """One line per query in the record's `late_builds`."""
+    return [f"late     {label} {q}: " + ", ".join(f"{d}={s:.3f}s" for d, s in builds.items())
+            for q, builds in sorted(record.get("late_builds", {}).items())]
 
 
 def main() -> int:
@@ -78,6 +88,9 @@ def main() -> int:
         layers = layer_line(q, old_counters.get(q), new_counters.get(q))
         if layers:
             print(layers)
+    for label, record in (("committed", committed), ("fresh", fresh)):
+        for line in late_build_lines(label, record):
+            print(line)
     n = len(committed["queries"])
     print(f"total: committed {committed['value']:.1f}s fresh {fresh['value']:.1f}s over {n} queries; "
           f"{len(regressed)} regressed, {len(jitter)} known-noisy outliers")
