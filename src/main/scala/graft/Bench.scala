@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Benchmark main — times every `SparkEntry.queries` entry on
   * `SPARK_GRAFT_SF_DIR` (default sf0.1) and prints ONE JSON line:
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`,
@@ -35,10 +37,12 @@ package graft
   * (fresh plan, first codegen) that the median hides.
   *
   * Per-query execution counters ([[Measure.Counters]]: jobs, stages,
-  * tasks, task/CPU/GC seconds, shuffle and spill) land in the full
-  * record's `counters` map, averaged over the reps. The [[Measure]]
-  * listener stays attached for the whole run; its bus drain and snapshot
-  * run between queries, outside the timed reps.
+  * tasks, task/CPU/GC seconds, shuffle, spill and codegen compiles) land
+  * in the full record's `counters` map, averaged over the reps. The
+  * [[Measure]] listener stays attached for the whole run; its bus drain
+  * and snapshot run between queries, outside the timed reps. The full
+  * record's `jvm` entry holds the Metaspace pool's used and committed MB
+  * and the JVM's total codegen compiles, read after the query section.
   *
   * A layout built DURING the query section is one the layout phase missed:
   * `late_builds` maps each query that built one to `{layout dir: secs}`,
@@ -205,6 +209,16 @@ object Bench {
       sentinelPost = sentinelProbes(spark)
       runAttempts += 1
     }
+    // JVM cost of the run, read after the query section and outside every
+    // timed region: Metaspace holds the generated classes the codegen
+    // cache keeps alive, and `codegen_compiles` counts every class this
+    // JVM compiled (warm-up, layouts, queries, probes).
+    val metaspace = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").map(_.getUsage)
+    val jvmJson =
+      f"""{"metaspace_used_mb":${metaspace.fold(-1.0)(_.getUsed / 1048576.0)}%.1f,""" +
+        f""""metaspace_committed_mb":${metaspace.fold(-1.0)(_.getCommitted / 1048576.0)}%.1f,""" +
+        f""""codegen_compiles":${Measure.snapshot(spark).compiles}}"""
     val qs = results
       .map(r => "\"" + r.name + "\":" + f"${r.med}%.3f")
       .mkString("{", ",", "}")
@@ -218,7 +232,8 @@ object Bench {
         "\"" + k + "\":" +
           f"""{"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"task_s":${c.taskMs / 1e3}%.3f,""" +
           f""""cpu_s":${c.cpuMs / 1e3}%.3f,"gc_s":${c.gcMs / 1e3}%.3f,"shuffle_read_mb":${c.shuffleReadB / 1048576.0}%.3f,""" +
-          f""""shuffle_write_mb":${c.shuffleWriteB / 1048576.0}%.3f,"spill_mb":${c.spillB / 1048576.0}%.3f}"""
+          f""""shuffle_write_mb":${c.shuffleWriteB / 1048576.0}%.3f,"spill_mb":${c.spillB / 1048576.0}%.3f,""" +
+          f""""compiles":${c.compiles}}"""
       }
       .mkString("{", ",", "}")
     val failed = results.collect { case r if r.med < 0 => "\"" + r.name + "\"" }
@@ -257,7 +272,7 @@ object Bench {
         f""""sentinel_attempts":$sentinelAttempts,"run_attempts":$runAttempts,"degraded_host":$degradedHost"""
     val json =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","mode":"$mode","reps":$Reps,$sentinelJson,"queries":$qs,"spread":$spreadJson,"counters":$countersJson,"failed":${failed
-          .mkString("[", ",", "]")},"layout_phase_secs":$layoutPhaseSecs%.3f,"layouts":$layoutJson,"late_builds":$lateBuilds,"sf":"$sfDir"}"""
+          .mkString("[", ",", "]")},"layout_phase_secs":$layoutPhaseSecs%.3f,"layouts":$layoutJson,"late_builds":$lateBuilds,"jvm":$jvmJson,"sf":"$sfDir"}"""
     println(json)
     // Also WRITE the line: stdout capture has twice truncated the per-query
     // record (BENCH_r05/r06.json were tail fragments) — the round's

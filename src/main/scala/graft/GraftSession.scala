@@ -18,6 +18,16 @@ import org.apache.spark.sql.SparkSession
   *     100 TB safety net for skewed group/join keys.
   *   - `outputTimestampType=TIMESTAMP_MICROS`: written results are hashed
   *     against a DuckDB oracle at µs precision (FIXTURES.md §3).
+  *   - `codegen.cache.maxEntries=4000`: Spark's default of 100 entries is
+  *     smaller than one pass of a repeated mix, so every warm run evicted
+  *     and recompiled its generated classes (Janino, then a fresh JIT): the
+  *     five perfbench `pipeline` ops compile about 145 classes per pass and
+  *     recompiled about 27 per op. One cold full `Bench` run at sf0.1
+  *     compiles 3,213 distinct classes with no bound on the cache (about
+  *     1,900 in the query section, the rest in layout builds and warm-up),
+  *     so 4000 holds a whole registry sweep with headroom. Cost, at the end
+  *     of a full sf0.1 `Bench` run on 4 cores: Metaspace used 194 → 215 MB,
+  *     committed 199 → 228 MB. A fixed setting, not a knob.
   */
 object GraftSession {
   val defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -57,6 +67,9 @@ object GraftSession {
       // this sort, not the aggregation.)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2097152")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // Generated-class cache, sized in the header. A static conf: Spark
+      // reads it once, from the active session, when CodeGenerator loads.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       // static conf; bucketed-table tests and any managed-table DDL land here
       .config("spark.sql.warehouse.dir", s"${sys.props("java.io.tmpdir")}/graft_warehouse")
       // derived-layout root (LayoutCache); env override so a driver run can

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -20,6 +21,8 @@ object Measure {
 
   /** Cumulative task-metric totals. `readTasks` counts the tasks that read
     * any shuffle, so `shuffleReadB / readTasks` is the mean reducer read.
+    * `compiles` counts generated classes compiled in this JVM (a codegen
+    * cache miss), whichever thread compiled them.
     */
   final case class Counters(
       jobs: Long = 0,
@@ -31,27 +34,28 @@ object Measure {
       shuffleReadB: Long = 0,
       shuffleWriteB: Long = 0,
       spillB: Long = 0,
-      readTasks: Long = 0
+      readTasks: Long = 0,
+      compiles: Long = 0
   ) {
     def -(o: Counters): Counters =
       Counters(
         jobs - o.jobs, stages - o.stages, tasks - o.tasks, taskMs - o.taskMs, cpuMs - o.cpuMs,
         gcMs - o.gcMs, shuffleReadB - o.shuffleReadB, shuffleWriteB - o.shuffleWriteB,
-        spillB - o.spillB, readTasks - o.readTasks
+        spillB - o.spillB, readTasks - o.readTasks, compiles - o.compiles
       )
 
     /** Per-rep average over `n` reps (integer division). */
     def /(n: Long): Counters =
       Counters(
         jobs / n, stages / n, tasks / n, taskMs / n, cpuMs / n, gcMs / n, shuffleReadB / n,
-        shuffleWriteB / n, spillB / n, readTasks / n
+        shuffleWriteB / n, spillB / n, readTasks / n, compiles / n
       )
 
     /** One-line rendering, the suffix of every [[timed]] line. */
     def render: String =
       f"jobs=$jobs%d stages=$stages%d tasks=$tasks%d task_s=${taskMs / 1e3}%.2f cpu_s=${cpuMs / 1e3}%.2f " +
         f"gc_s=${gcMs / 1e3}%.2f shuffle_r=${shuffleReadB / Mib}%.1fMiB shuffle_w=${shuffleWriteB / Mib}%.1fMiB " +
-        f"spill=${spillB / Mib}%.1fMiB"
+        f"spill=${spillB / Mib}%.1fMiB compiles=$compiles%d"
   }
 
   private val Mib = 1048576.0
@@ -119,15 +123,16 @@ object Measure {
     }
   }
 
-  /** Drain the listener bus, then read the counters. `SparkContext
-    * .listenerBus` is `private[spark]`, hence the reflection.
+  /** Drain the listener bus, then read the counters, plus the JVM-wide
+    * codegen compile count. `SparkContext.listenerBus` is `private[spark]`,
+    * hence the reflection.
     */
   def snapshot(spark: SparkSession): Counters = {
     val l   = listener(spark)
     val sc  = spark.sparkContext
     val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
     bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    l.counters
+    l.counters.copy(compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
   }
 
   /** One measured region: its value, wall seconds, counter delta, and the

@@ -26,11 +26,26 @@ class MeasureSpec extends SparkSpec {
     assert(r.reducerMaxB > 0 && r.reducerMaxB <= r.delta.shuffleReadB)
   }
 
+  test("a warm sweep of more than 100 distinct whole-stage plans compiles nothing") {
+    // 150 projections, each inlining its own literal, so each is a distinct
+    // generated class: Spark's default codegen cache of 100 entries would
+    // evict the sweep's first classes before the second sweep reaches them.
+    def sweep(): Long = {
+      val before = Measure.snapshot(spark)
+      (1 to 150).foreach(i => spark.range(0, 10, 1, 1).selectExpr(s"id * $i + ${i * 7} AS v").collect())
+      (Measure.snapshot(spark) - before).compiles
+    }
+    val cold = sweep()
+    assert(cold > 100, s"first sweep compiled $cold classes")
+    assert(sweep() == 0)
+  }
+
   test("Counters subtract and average field by field") {
-    val a = Measure.Counters(jobs = 6, tasks = 30, shuffleWriteB = 900)
-    val b = Measure.Counters(jobs = 2, tasks = 10, shuffleWriteB = 300)
-    assert(a - b == Measure.Counters(jobs = 4, tasks = 20, shuffleWriteB = 600))
-    assert((a - b) / 2 == Measure.Counters(jobs = 2, tasks = 10, shuffleWriteB = 300))
+    val a = Measure.Counters(jobs = 6, tasks = 30, shuffleWriteB = 900, compiles = 40)
+    val b = Measure.Counters(jobs = 2, tasks = 10, shuffleWriteB = 300, compiles = 20)
+    assert(a - b == Measure.Counters(jobs = 4, tasks = 20, shuffleWriteB = 600, compiles = 20))
+    assert((a - b) / 2 == Measure.Counters(jobs = 2, tasks = 10, shuffleWriteB = 300, compiles = 10))
+    assert((a - b).render.endsWith("compiles=20"))
   }
 
   test("unknownQueries returns exactly the unregistered names, in order") {

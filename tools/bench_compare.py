@@ -16,8 +16,9 @@ Exit code 1 iff any query REGRESSED (so CI/driver use is one line).
 
 For every REGRESSED or JITTER query whose two records both carry per-query
 counters (graft.Bench's `counters` map), one more line prints the counter
-deltas -- jobs, task_s, cpu_s, shuffle MB, spill MB -- so a regression says
-which layer moved. The counters do not change the verdict.
+deltas -- jobs, task_s, cpu_s, shuffle MB, spill MB, and codegen compiles
+when both records carry them -- so a regression says which layer moved.
+The counters do not change the verdict.
 
 A record with a non-empty `late_builds` (layouts built inside the query
 section, i.e. missing from a query's declared layouts) gets one line per
@@ -33,6 +34,7 @@ LAYERS = [
     ("cpu_s", ("cpu_s",)),
     ("shuffle_mb", ("shuffle_read_mb", "shuffle_write_mb")),
     ("spill_mb", ("spill_mb",)),
+    ("compiles", ("compiles",)),
 ]
 
 
@@ -42,8 +44,10 @@ def layer_line(q, old, new):
         return None
     parts = []
     for label, keys in LAYERS:
-        a = sum(old.get(k, 0) for k in keys)
-        b = sum(new.get(k, 0) for k in keys)
+        if not all(k in old and k in new for k in keys):
+            continue
+        a = sum(old[k] for k in keys)
+        b = sum(new[k] for k in keys)
         parts.append(f"{label} {a:g} -> {b:g} ({b - a:+.3g})")
     return f"         {q} layers: " + ", ".join(parts)
 
